@@ -10,11 +10,13 @@ Reference distributions (FIXTURES.md §B):
     reproducibility is a design goal of the reference and of these
     generators (numpy RandomState is stable across platforms).
 
-Generation is host-side (numpy -> createDataFrame), mirroring the
-reference's host-side generate(); at bench scale (200k rows, 150 txns)
-this is trivially small. For cluster-scale synthetic data use
-``kv_table_distributed`` (spark.range + hash-derived values, no
-driver materialization).
+Generation is host-side (numpy on the driver), mirroring the
+reference's host-side generate(), and lands in Arrow ``LocalRelation``s
+(:func:`~gpu_database_spark.functions.local.local_frame`): collecting
+or broadcasting a generated batch runs no Spark job. At bench scale
+(200k rows, 150 txns) this is trivially small. For cluster-scale
+synthetic data use ``kv_table_distributed`` (spark.range +
+hash-derived values, no driver materialization).
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gpu_database_spark.functions.local import local_frame
 
 PRINTABLE_LO, PRINTABLE_HI = 33, 126  # random.h:35 char range
 
@@ -34,7 +38,7 @@ def kv_table(spark: SparkSession, n_rows: int = 1000, seed: int = 42) -> DataFra
     chars = rng.randint(PRINTABLE_LO, PRINTABLE_HI + 1, size=(n_rows, 100), dtype=np.int64)
     values = ["".join(map(chr, row)) for row in chars]
     rows = [(int(k), v) for k, v in zip(range(1, n_rows + 1), values)]
-    return spark.createDataFrame(rows, "key long, value string")
+    return local_frame(spark, rows, "key long, value string")
 
 
 def kv_table_distributed(spark: SparkSession, n_rows: int, seed: int = 42) -> DataFrame:
@@ -56,14 +60,9 @@ def transactions(
 ) -> DataFrame:
     """One batch of transactions in exploded ops form
     (txn_id, op_idx, key, is_update), reference distributions."""
-    rows = transactions_local(batch_size, max_ops, keys_max, write_rate, seed)
-    # Slice count tracks batch size: a reference-scale batch (~2k op
-    # rows) in defaultParallelism(=32) slices pays ~30 task overheads
-    # per probe/collect for no parallelism gain; ~512 rows per slice
-    # keeps big batches spread and small ones cheap.
-    n_slices = max(1, min(spark.sparkContext.defaultParallelism, len(rows) // 512 + 1))
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n_slices),
+    return local_frame(
+        spark,
+        transactions_local(batch_size, max_ops, keys_max, write_rate, seed),
         "txn_id long, op_idx int, key long, is_update boolean",
     )
 

@@ -62,9 +62,12 @@ def pagerank(nodes: DataFrame, edges: DataFrame, n_iters: int = N_ITERS) -> Data
     out-degree fractions; the final rank is rounded by callers."""
     n_nodes = nodes.count()  # scalar; one job, reused every iteration
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # edges with degree, cached: reused every iteration unchanged
-    ed = edges.join(out_deg, "src").select("src", "dst", "deg").cache()
-    ed.count()
+    # edges with degree, reused every iteration unchanged; a
+    # materialize() block, so release_all frees it after the query
+    ed = materialize(
+        edges.join(out_deg, "src").select("src", "dst", "deg"),
+        force_checkpoint=True,
+    )
 
     ranks = nodes.select(F.col("id"), F.lit(1.0 / n_nodes).alias("rank"))
     for i in range(n_iters):

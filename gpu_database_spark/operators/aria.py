@@ -36,6 +36,11 @@ Scale notes (100 TB): each epoch is 3 shuffles (reserve groupBy,
 analyze join+groupBy, install join) all on `key` or `txn_id`; the
 retry loop localCheckpoints the table each epoch to cut the growing
 lineage (the one real perf trap of iterative DataFrame programs).
+A broadcast-sized batch skips all of that: on run_batch's local path
+the batch and its winners are driver-built Arrow ``LocalRelation``s
+(functions/local.py), so nothing runs on the cluster before the
+install, and the install (anti-join of the table against the
+broadcast winners, plus their union) is the only distributed work.
 """
 
 from __future__ import annotations
@@ -45,6 +50,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gpu_database_spark.functions.local import local_frame
 from gpu_database_spark.functions.materialize import materialize
 
 
@@ -198,9 +204,9 @@ def run_epoch(
         (aborted if abort else committed_ids).append(r.txn_id)
     committed_ids.sort()
     aborted.sort()
-    committed = ops.sparkSession.createDataFrame(
-        [(t,) for t in committed_ids] or [(None,)], "txn_id long"
-    ).filter(F.col("txn_id").isNotNull())
+    committed = local_frame(
+        ops.sparkSession, [(t,) for t in committed_ids], "txn_id long"
+    )
     win = winners(ops, F.broadcast(committed), new_value)
     new_table = install(table, win)
     return EpochResult(committed_ids, aborted, new_table)
@@ -344,12 +350,17 @@ def run_batch(
     trap fix, SURVEY.md §4.2).
 
     ``local_threshold``: batches of at most this many ops run the epoch
-    protocol on the driver in one pass (one collect + one distributed
-    install) — an OLTP epoch batch is broadcast-sized by definition
-    (the reference caps it at 200 txns, TransctionManager.cuh:15), and
-    per-epoch Spark job overhead would dominate it. The table itself
-    stays distributed; only the op batch is local. Larger batches run
-    fully distributed; equivalence of the paths is test-enforced
+    protocol on the driver in one pass — an OLTP epoch batch is
+    broadcast-sized by definition (the reference caps it at 200 txns,
+    TransctionManager.cuh:15), and per-epoch Spark job overhead would
+    dominate it. The table itself stays distributed; only the op batch
+    is local. When ``ops`` is a ``LocalRelation`` (``gen.transactions``
+    or any :func:`~gpu_database_spark.functions.local.local_frame`)
+    the probe collect is served on the driver and the winner overlay
+    is one too, so this path runs no Spark job before the caller's
+    action on ``result.table``: the install is the only distributed
+    work. Larger batches run fully distributed; equivalence of the
+    paths is test-enforced
     (tests/test_aria.py::test_local_fast_path_equals_distributed).
 
     ``collect_commit_order``: whether to materialize the driver-side
@@ -363,8 +374,9 @@ def run_batch(
     """
     probe = None
     if not rmw and new_value is None:
-        # ONE bounded job decides the path AND delivers the rows if local:
-        # collecting limit(threshold+1) never exceeds the local budget.
+        # ONE bounded collect decides the path AND delivers the rows if
+        # local (no job at all when ops is a LocalRelation): collecting
+        # limit(threshold+1) never exceeds the local budget.
         probe = ops.limit(local_threshold + 1).collect()
     if probe is not None and len(probe) <= local_threshold:
         import hashlib
@@ -383,7 +395,7 @@ def run_batch(
             for k, (t, op) in sorted(winner.items())
         ]
         if win_rows:
-            win = ops.sparkSession.createDataFrame(win_rows, "key long, value string")
+            win = local_frame(ops.sparkSession, win_rows, "key long, value string")
             result.table = install(table, F.broadcast(win))
         return result
     if new_value is None:
@@ -413,7 +425,8 @@ def run_batch(
             if not aborted:
                 break
             orig_map = {i + 1: orig_map[t] for i, t in enumerate(aborted)}
-            aborted_df = live.sparkSession.createDataFrame(
+            aborted_df = local_frame(
+                live.sparkSession,
                 [(t, i + 1) for i, t in enumerate(aborted)],
                 "txn_id long, _new_tid long",
             )

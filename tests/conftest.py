@@ -43,3 +43,32 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture
+def job_group(spark):
+    """``with job_group() as jobs:`` runs the body in a fresh Spark job
+    group; ``jobs()`` returns how many jobs the group has launched so
+    far (listener bus drained first, so none is missed)."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def group():
+        gid = f"test-{uuid.uuid4().hex}"
+
+        def jobs() -> int:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+        sc.setJobGroup(gid, gid)
+        try:
+            yield jobs
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+
+    return group

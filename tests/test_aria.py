@@ -66,27 +66,41 @@ def serial_oracle(table, ops_rows, reorder, max_epochs=100):
     return table, epoch_commits
 
 
+WORKLOAD_BATCH = dict(batch_size=40, max_ops=8, keys_max=60, write_rate=0.4, seed=11)
+
+
 @pytest.fixture(scope="module")
 def workload(spark):
     table_rows = {k: md5(f"init:{k}") for k in range(1, 101)}
     table = spark.createDataFrame(
         [(k, v) for k, v in table_rows.items()], "key long, value string"
     )
-    ops_rows = gen.transactions_local(
-        batch_size=40, max_ops=8, keys_max=60, write_rate=0.4, seed=11
-    )
+    ops_rows = gen.transactions_local(**WORKLOAD_BATCH)
     ops = spark.createDataFrame(
         ops_rows, "txn_id long, op_idx int, key long, is_update boolean"
     )
     return table_rows, table, ops_rows, ops
 
 
-@pytest.mark.parametrize("reorder", [False, True])
-@pytest.mark.parametrize("local_threshold", [0, 100_000])
-def test_final_state_matches_serial_oracle(spark, workload, reorder, local_threshold):
+@pytest.mark.parametrize(
+    "source,local_threshold,reorder",
+    [
+        pytest.param(source, lt, reorder, id=f"{prefix}{lt}-{reorder}")
+        for source, prefix in (("list", ""), ("gen", "gen-"))
+        for lt in (0, 100_000)
+        for reorder in (False, True)
+    ],
+)
+def test_final_state_matches_serial_oracle(
+    spark, workload, source, local_threshold, reorder
+):
     """Both execution paths (0 -> fully distributed DataFrame algebra,
-    100k -> driver-local fast path) must match the serial-order replay."""
+    100k -> driver-local fast path) must match the serial-order replay,
+    for ops built by ``createDataFrame(list)`` (an RDD leaf) and by
+    ``gen.transactions`` (an Arrow LocalRelation) alike."""
     table_rows, table, ops_rows, ops = workload
+    if source == "gen":
+        ops = gen.transactions(spark, **WORKLOAD_BATCH)
     result = aria.run_batch(
         table,
         ops,
@@ -102,6 +116,20 @@ def test_final_state_matches_serial_oracle(spark, workload, reorder, local_thres
     # ORIGINAL id it was submitted with (not the retry renumbering)
     assert len(result.commit_order) == sum(epoch_commits)
     assert sorted(result.commit_order) == sorted({t for t, _, _, _ in ops_rows})
+
+
+def test_local_path_runs_no_job_before_install(spark, workload, job_group):
+    """On a gen.transactions batch the local path is all driver work:
+    no Spark job runs until the caller acts on ``result.table``."""
+    table_rows, table, ops_rows, _ = workload
+    with job_group() as jobs:
+        ops = gen.transactions(spark, **WORKLOAD_BATCH)
+        result = aria.run_batch(table, ops, reorder=True)
+        assert result.epochs > 1
+        assert jobs() == 0
+        got = {r.key: r.value for r in result.table.collect()}
+        assert jobs() > 0  # the install is where the distributed work is
+    assert got == serial_oracle(table_rows, ops_rows, reorder=True)[0]
 
 
 def test_overlay_equals_rmw_install_path(spark, workload):

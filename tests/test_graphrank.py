@@ -45,6 +45,26 @@ def test_pagerank_matches_numpy(spark, sf_dir):
     assert worst < 1e-12, f"max |spark - numpy| = {worst}"
 
 
+def test_pagerank_leaves_no_persistent_rdd_after_release_all(spark, sf_dir):
+    """Every block a pagerank call persists (the edge-degree frame and
+    the rank checkpoints) is owned by materialize, so release_all frees
+    it: nothing the call created outlives the query."""
+    from gpu_database_spark.functions.materialize import release_all
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    d = load_table(spark, sf_dir, "documents")
+    nodes = d.select(F.col("doc_id").alias("id"))
+    before = persistent()
+    pagerank(nodes, synth_edges(d), N_ITERS).collect()
+    assert persistent() - before, "pagerank persisted nothing: test is vacuous"
+    release_all(spark)
+    assert not persistent() - before
+
+
 def test_pagerank_ranks_hubs_first(spark, sf_dir):
     """The query's top-50 must be ordered by rank and favor high
     in-degree nodes overall (rank correlates with in-degree on a

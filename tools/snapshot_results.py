@@ -6,6 +6,9 @@ dirs and writes an md5 over the sorted stringified rows — compare the
 JSON across two trees to prove a restructuring changed nothing.
 
     python tools/snapshot_results.py --out snap.json [--sf DIR ...] name...
+
+Without ``--sf`` it snapshots the one SF dir named by
+``$SPARK_GRAFT_SF_DIR`` (the catalog's default dir when unset).
 """
 
 from __future__ import annotations
@@ -25,14 +28,17 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--out", required=True)
     ap.add_argument(
-        "--sf", action="append", default=None, help="SF dirs (repeatable)"
+        "--sf", action="append", default=None,
+        help="SF dirs (repeatable; default $SPARK_GRAFT_SF_DIR)",
     )
     args = ap.parse_args()
-    sf_dirs = args.sf or ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
     from gpu_database_spark.session import get_spark
     from gpu_database_spark import registry
     from gpu_database_spark.functions.materialize import release_all
+    from gpu_database_spark.sources.catalog import DEFAULT_SF_DIR
+
+    sf_dirs = args.sf or [DEFAULT_SF_DIR]
 
     spark = get_spark(app_name="snapshot-results")
     spark.sparkContext.setLogLevel("ERROR")
