@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gpu_database_spark.functions.materialize import materialize
+from gpu_database_spark.functions.materialize import fixed_point, materialize
 from gpu_database_spark.registry import register
 from gpu_database_spark.sources.catalog import load_table
 
@@ -142,14 +142,8 @@ def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
     localCheckpoint blocks are non-replicated (an executor loss would
     fail the job); on a real cluster swap in
     persist(MEMORY_AND_DISK)+count or a reliable checkpoint for
-    fault-tolerant materialization. eager=False (r14): the broadcast
-    build side of the self-join is the first computation and persists
-    the checkpoint blocks; the probe side reads them — still exactly
-    one execution (A/B result-identical, 1.51 -> 1.41 s), with no
-    blocking job during query build."""
-    b = lsh_bands(minhash_signatures(docs)).transform(
-        lambda d: materialize(d, eager=False)
-    )
+    fault-tolerant materialization."""
+    b = lsh_bands(minhash_signatures(docs)).transform(materialize)
     a = b.alias("a")
     c = b.alias("c")
     return (
@@ -304,59 +298,46 @@ def connected_components(
 
     nodes: (id), edges: (a, b). Returns (id, component) with component
     = min node id reachable. Iterations ~ graph diameter (near-dup
-    clusters are shallow); each round is one join + groupBy-min,
-    localCheckpoint-ed to bound lineage. At 100 TB this is the
-    standard alternating min-label loop — no driver-side graph.
+    clusters are shallow); each round is one join + groupBy-min. At
+    100 TB this is the standard alternating min-label loop — no
+    driver-side graph. Warns if ``max_iters`` runs out before the
+    labels settle.
     """
-    # eager=False (r14): round 1's convergence-sum collect is the first
-    # action — it materializes the symmetric closure and the round-1
-    # labels in ONE job instead of two blocking builds.
-    sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).distinct().transform(lambda d: materialize(d, eager=False))
-    labels = nodes.select(F.col("id"), F.col("id").alias("component"))
-    # Convergence check: labels only ever DECREASE under min-propagation,
-    # so the exact decimal sum of all labels strictly decreases iff any
-    # label changed — one scan of the (checkpointed) label table per
-    # round instead of the old full self-join + filter + count, which
-    # cost an extra shuffle join every round (r13 optimization).
-    prev_sum = None
-    for _ in range(max_iters):
-        # Neighbor-min and the keep-own-label rule fused into ONE
-        # aggregation: every node votes its own label alongside its
-        # neighbors' (unionAll, map-side combinable), so the old
-        # left-join-back of labels — a third shuffle per round — is gone
-        # (r13 optimization; min(own ∪ neighbors) is the same update).
-        new_labels = (
+    sym = materialize(
+        edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
+            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+        ).distinct()
+    )
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        # Neighbor-min and the keep-own-label rule in ONE aggregation:
+        # every node votes its own label alongside its neighbors'
+        # (unionAll, map-side combinable), so no left-join back of the
+        # labels is needed — min(own ∪ neighbors) is the same update.
+        return (
             sym.join(labels, sym.dst == labels.id)
             .select(F.col("src").alias("id"), "component")
             .unionAll(labels)
             .groupBy("id")
             .agg(F.min("component").alias("component"))
-            # loop-carried state: ALWAYS checkpoint (never env-switched
-            # persist) or the self-referencing label plan regrows every
-            # round — see materialize() docstring. eager=False (r14):
-            # the convergence-sum collect on the next line is the
-            # action that materializes the checkpoint, so each round
-            # runs ONE job (update + probe fused), not two.
-            .transform(
-                lambda d: materialize(d, force_checkpoint=True, eager=False)
-            )
         )
-        cur_sum = new_labels.agg(
+
+    def label_sum(labels: DataFrame):
+        # Labels only ever DECREASE under min-propagation, so the exact
+        # sum strictly decreases iff any label changed: one scan of the
+        # label table per round, no self-join. NULL on an empty node
+        # set (semdedup_pipeline's fixture graph), which ends the loop
+        # after one round instead of max_iters rounds of empty jobs.
+        return labels.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
-        labels = new_labels
-        if cur_sum is None:
-            # Empty node set: SUM over zero rows is NULL every round —
-            # the graph is trivially converged. Without this the loop
-            # burned all max_iters rounds of Spark jobs on empty frames
-            # (ADVICE r13; semdedup_pipeline's fixture graph is empty).
-            break
-        if prev_sum is not None and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+
+    return fixed_point(
+        nodes.select(F.col("id"), F.col("id").alias("component")),
+        propagate,
+        max_iters=max_iters,
+        probe=label_sum,
+    )
 
 
 @register(
@@ -1138,12 +1119,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     child_schema = "cid string, cv array<double>, rid string"
-    # Codebook as a TABLE (r12's named fix): materialized once, joined by
-    # the cogroup shuffle — never collected to the driver. eager=False:
-    # the non-empty-router collect on the next line materializes it.
+    # Codebook as a TABLE: materialized once, joined by the cogroup
+    # shuffle — never collected to the driver.
     child1 = materialize(
-        _route(seeds.select("cid", "cv"), "cv", child_schema, all_rids, all_rvecs),
-        eager=False,
+        _route(seeds.select("cid", "cv"), "cv", child_schema, all_rids, all_rvecs)
     )
     ne1 = sorted({r.rid for r in child1.select("rid").distinct().collect()})
 
@@ -1183,9 +1162,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(s, p -> CAST(p.mm AS DOUBLE) / 1000000.0)").alias("cv"),
         )
     )
-    child2 = materialize(
-        _route(cent, "cv", child_schema, all_rids, all_rvecs), eager=False
-    )
+    child2 = materialize(_route(cent, "cv", child_schema, all_rids, all_rvecs))
     ne2 = sorted({r.rid for r in child2.select("rid").distinct().collect()})
     r2_ids, r2_vecs = _nonempty(ne2)
     assigned = _cell_assign(
@@ -1196,11 +1173,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     normed = assigned.withColumn("nrm", l2_norm(F.col("embedding")))
     # Materialized once: AQE broadcasts one pair-join side, so without
     # this the per-vector norm/bucket projection computes twice.
-    # eager=False: the broadcast build computes + persists it, the
-    # probe side reads the blocks (same fusion as lsh_candidate_pairs).
-    blocked = normed.repartition("label", "bucket").transform(
-        lambda x: materialize(x, eager=False)
-    )
+    blocked = normed.repartition("label", "bucket").transform(materialize)
     a = blocked.select(
         F.col("vec_id").alias("va"), "label", "bucket",
         F.col("embedding").alias("ea"), F.col("nrm").alias("na"),
@@ -1386,19 +1359,15 @@ def text_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream clustering never sees a dense row."""
     # spread=True + columns=: shingle explosion + 8 minhash folds fuse
     # into the documents scan — one row group means one core does every
-    # hash. The r13 full-row flip carried lang/n_chars/meta through the
-    # exchange and REGRESSED on the driver host (3.3 -> 5.1 s at 32
-    # cores, scaling ratio 0.33 — VERDICT r13 #1); the r14 projection
-    # spreads only (doc_id, text). A/B this round, 4 alternating reps,
-    # result-identical: narrow 2.43s / full 2.58 / unspread 2.76 at 32
-    # cores; 1.87 / 1.89 / 2.84 at 8 cores — narrow dominates both.
+    # hash. Spreading the full row carried lang/n_chars/meta through
+    # the exchange and regressed at 32 cores (3.3 -> 5.1 s), so only
+    # (doc_id, text) is spread. A/B, 4 alternating reps, result-identical:
+    # narrow 2.43s / full 2.58 / unspread 2.76 at 32 cores; 1.87 / 1.89
+    # / 2.84 at 8 cores — narrow dominates both.
     d = load_table(
         spark, sf_dir, "documents", spread=True, columns=["doc_id", "text"]
     )
-    # eager=False (r14): the signature checkpoint materializes inside
-    # the caller's action (block-level locking still guarantees single
-    # execution for the join's two sides) — one fewer blocking job.
-    sig = minhash_signatures(d).transform(lambda x: materialize(x, eager=False))
+    sig = minhash_signatures(d).transform(materialize)
     pairs = lsh_candidate_pairs(d)
     sym = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -1479,8 +1448,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_ngram_jaccard, different candidate source + both-direction
     scoring.
 
-    r14 (guide §3.2 join-input reduction, VERDICT r13 #3): every output
-    row is keyed by a candidate PAIR, so the exact shingle table —
+    Join-input reduction: every output row is keyed by a candidate PAIR, so the exact shingle table —
     previously exploded, distinct-ed and checkpointed for ALL documents
     — is needed only for documents that appear in some pair. The
     documents frame is semi-joined to the pair endpoints BEFORE the
@@ -1493,20 +1461,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus itself."""
     d = load_table(spark, sf_dir, "documents")
     # Materialized: the candidate set feeds three consumers (the doc
-    # universe prune, the intersection, the final assembly); lazily —
-    # the caller's action computes each checkpoint exactly once.
-    pairs = lsh_candidate_pairs(d).transform(
-        lambda x: materialize(x, eager=False)
-    )
+    # universe prune, the intersection, the final assembly).
+    pairs = lsh_candidate_pairs(d).transform(materialize)
     pair_docs = pairs.select(F.col("doc_a").alias("doc_id")).unionAll(
         pairs.select(F.col("doc_b").alias("doc_id"))
     )
     cand_docs = d.join(pair_docs, "doc_id", "left_semi")
-    sh = (
-        shingles(cand_docs)
-        .distinct()
-        .transform(lambda x: materialize(x, eager=False))
-    )
+    sh = shingles(cand_docs).distinct().transform(materialize)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("_bdoc"), F.col("shingle").alias("shingle_b"))
@@ -1616,9 +1577,7 @@ def semdedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_knn_graph(spark, sf_dir)
         .filter(F.col("est_jaccard") * N_HASHES >= SEM_MIN_MATCH)
         .select(F.col("doc_id").alias("a"), F.col("neighbor_id").alias("b"))
-        # eager=False (r14): materialized by the CC loop's first
-        # convergence probe — one fewer blocking build job.
-        .transform(lambda d: materialize(d, eager=False))
+        .transform(materialize)
     )
     nodes = (
         edges.select(F.col("a").alias("id"))

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_database_spark.functions.materialize import materialize
+from gpu_database_spark.functions.materialize import fixed_point, materialize
 from gpu_database_spark.registry import register
 from gpu_database_spark.sources.catalog import load_table
 
@@ -64,13 +64,9 @@ def pagerank(nodes: DataFrame, edges: DataFrame, n_iters: int = N_ITERS) -> Data
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # edges with degree, reused every iteration unchanged; a
     # materialize() block, so release_all frees it after the query
-    ed = materialize(
-        edges.join(out_deg, "src").select("src", "dst", "deg"),
-        force_checkpoint=True,
-    )
+    ed = materialize(edges.join(out_deg, "src").select("src", "dst", "deg"))
 
-    ranks = nodes.select(F.col("id"), F.lit(1.0 / n_nodes).alias("rank"))
-    for i in range(n_iters):
+    def power_step(ranks: DataFrame) -> DataFrame:
         contribs = (
             ed.join(ranks, ed.src == ranks.id)
             .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
@@ -82,7 +78,7 @@ def pagerank(nodes: DataFrame, edges: DataFrame, n_iters: int = N_ITERS) -> Data
             ranks.join(out_deg, ranks.id == out_deg.src, "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
         )
-        ranks = (
+        return (
             nodes.join(contribs, nodes.id == contribs.dst, "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -94,10 +90,9 @@ def pagerank(nodes: DataFrame, edges: DataFrame, n_iters: int = N_ITERS) -> Data
                 ).alias("rank"),
             )
         )
-        if (i + 1) % 4 == 0:
-            # truncate lineage: keeps the per-iteration plan constant-size
-            ranks = materialize(ranks, force_checkpoint=True)
-    return ranks
+
+    ranks = nodes.select(F.col("id"), F.lit(1.0 / n_nodes).alias("rank"))
+    return fixed_point(ranks, power_step, max_iters=n_iters, checkpoint_every=4)
 
 
 @register(
@@ -211,63 +206,34 @@ def kcore(nodes: DataFrame, edges: DataFrame, k: int, max_iters: int = 100) -> D
     community-seed primitive. nodes: (id); edges: (src, dst),
     undirected semantics. Returns the surviving (id) rows.
 
-    Each round is one degree groupBy + one semi-join, localCheckpoint-ed
-    to bound lineage; rounds ~ peeling depth (small for power-law
-    graphs). The loop never ships rows to the driver — the fixpoint
-    test is a bounded count."""
-    sym = (
+    Each round is one degree groupBy + one semi-join; rounds ~ peeling
+    depth (small for power-law graphs). The loop never ships rows to
+    the driver — the fixpoint test is the survivor count, which only
+    repeats once no node is peeled (warns if ``max_iters`` runs out:
+    the survivors are then a superset of the k-core)."""
+    # static within the loop, not loop-carried
+    sym = materialize(
         edges.select("src", "dst")
         .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        # static within the loop, not loop-carried; eager=False (r14):
-        # round 1's survivor count materializes it alongside the seed
-        .transform(lambda d: materialize(d, eager=False))
     )
-    alive = materialize(nodes.select("id"), force_checkpoint=True, eager=False)
-    # One count job per round, not two: the previous round's survivor
-    # count is remembered instead of re-counting the (checkpointed)
-    # alive table it already measured (r13 optimization); the count is
-    # also the action that materializes the seed checkpoint (r14).
-    n_alive = alive.count()
-    for _ in range(max_iters):
-        # ONE alive-join per round, not two: only the DST side needs
-        # filtering before the degree count — a dead src can produce a
-        # keep row, but the left_semi against `alive` below discards
-        # it, so the survivor set is identical and each round saves a
-        # full join (r13 optimization; guide §2.4).
+
+    def peel(alive: DataFrame) -> DataFrame:
+        # Only the DST side needs the alive filter before the degree
+        # count: a dead src can produce a keep row, but the left_semi
+        # against `alive` discards it, so the survivor set is identical
+        # and each round saves a full join.
         deg = (
             sym.join(alive.select(F.col("id").alias("dst")), "dst")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select(F.col("src").alias("id"))
-        # eager=False (r14): the survivor count on the next line is the
-        # action that materializes the checkpoint — one job per peel
-        # round (peel + count fused), not two.
-        new_alive = materialize(
-            alive.join(keep, "id", "left_semi"),
-            force_checkpoint=True,
-            eager=False,
-        )
-        n_new = new_alive.count()
-        dropped = n_alive - n_new
-        alive = new_alive
-        n_alive = n_new
-        if dropped == 0:
-            break
-    else:
-        # exhausted max_iters without a fixpoint: the survivor set is a
-        # SUPERSET of the k-core (some degree<k nodes may remain) —
-        # callers must not treat it as converged silently
-        import warnings
+        return alive.join(keep, "id", "left_semi")
 
-        warnings.warn(
-            f"kcore: no fixpoint after {max_iters} peel rounds; "
-            "result is a superset of the k-core",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return alive
+    return fixed_point(
+        nodes.select("id"), peel, max_iters=max_iters, probe=lambda a: a.count()
+    )
 
 
 @register(
@@ -445,45 +411,31 @@ def label_propagation(nodes: DataFrame, edges: DataFrame, n_iters: int = LPA_ITE
     Scale shape per round: one join of the (src, dst) edge list with
     the label table (shuffle on node id) + one groupBy vote count +
     one argmax — the standard Pregel message topology; the label table
-    is checkpointed each round to truncate the growing loop lineage
-    (same discipline as pagerank above)."""
-    # eager=False (r14): LPA has a FIXED round count and no convergence
-    # probe, so nothing reads the labels between rounds — every
-    # materialization point can defer to the caller's single action.
-    # The checkpoint-marked frames still truncate the SQL plan at each
-    # cadence point immediately (the returned Dataset wraps the
-    # checkpoint RDD), and each marked RDD persists the first time the
-    # final job computes it — same lineage bound, same single
-    # execution, ZERO driver-blocking jobs during query build
-    # (previously: 1 edge materialize + 3 cadence checkpoints, all
-    # blocking; measured build 3.24 s vs noop-sink compute 0.09 s).
-    und = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().transform(lambda d: materialize(d, eager=False))
-    labels = nodes.select(F.col("id"), F.col("id").alias("lbl"))
-    for i in range(n_iters):
+    is checkpointed every second round (and after the last) to truncate
+    the growing loop lineage: with a fixed round count nothing reads
+    the labels between rounds, so lineage only doubles once between
+    checkpoints and half the checkpoint jobs go."""
+    und = materialize(
+        edges.union(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct()
+    )
+
+    def vote(labels: DataFrame) -> DataFrame:
         nbr = und.join(
             labels.withColumnRenamed("id", "dst"), "dst"
         ).select(F.col("src").alias("id"), "lbl")
         votes = nbr.unionAll(labels.select("id", "lbl"))
-        best = (
+        return (
             votes.groupBy("id", "lbl")
             .agg(F.count(F.lit(1)).alias("c"))
             .groupBy("id")
             .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m"))
             .select("id", (-F.col("m.nl")).alias("lbl"))
         )
-        # Checkpoint every SECOND round (and the last): the round count
-        # is FIXED (no convergence probe reads the labels between
-        # rounds), so lineage only doubles once between checkpoints and
-        # each label row still has exactly one consumer chain — same
-        # shuffle work, half the blocking checkpoint jobs (pagerank
-        # above runs the identical discipline at cadence 4;
-        # r13 optimization).
-        if i % 2 == 1 or i == n_iters - 1:
-            best = materialize(best, force_checkpoint=True, eager=False)
-        labels = best
-    return labels
+
+    labels = nodes.select(F.col("id"), F.col("id").alias("lbl"))
+    return fixed_point(labels, vote, max_iters=n_iters, checkpoint_every=2)
 
 
 def _lpa_oracle_sql() -> str:
@@ -569,11 +521,13 @@ def hits(nodes: DataFrame, edges: DataFrame, n_iters: int = HITS_ITERS) -> DataF
 
     Scale shape per round: two edge-label joins (shuffle on node id) +
     two groupBys + two broadcast normalization scalars — the same
-    Pregel message topology as pagerank above, checkpointed on the
-    same cadence to truncate loop lineage."""
-    a = nodes.select("id", F.lit(1.0).alias("a"))
-    h = nodes.select("id", F.lit(1.0).alias("h"))
-    for _ in range(n_iters):
+    Pregel message topology as pagerank above. Two vectors + two
+    normalization subtrees per round quadruple pagerank's plan growth,
+    so BOTH are checkpointed every round (measured: >10 min of analysis
+    at 8 rounds unchecked vs seconds checkpointed)."""
+
+    def update(ah: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+        _, h = ah
         # authority <- sum of hub over in-edges (src -> dst credits dst)
         a_new = (
             edges.join(h.withColumnsRenamed({"id": "src", "h": "hv"}), "src")
@@ -597,12 +551,16 @@ def hits(nodes: DataFrame, edges: DataFrame, n_iters: int = HITS_ITERS) -> DataF
             .crossJoin(F.broadcast(h_tot))
             .select("id", (F.coalesce("h", F.lit(0.0)) / F.col("t")).alias("h"))
         )
-        # Two vectors + two normalization subtrees per round quadruple
-        # the plan growth of pagerank's single vector — checkpoint BOTH
-        # every round or analysis time explodes (measured: >10 min at
-        # 8 rounds unchecked vs seconds checkpointed).
-        a = materialize(a, force_checkpoint=True)
-        h = materialize(h, force_checkpoint=True)
+        return a, h
+
+    a, h = fixed_point(
+        (
+            nodes.select("id", F.lit(1.0).alias("a")),
+            nodes.select("id", F.lit(1.0).alias("h")),
+        ),
+        update,
+        max_iters=n_iters,
+    )
     return a.join(h, "id").select(
         "id", F.col("a").alias("authority"), F.col("h").alias("hub")
     )
@@ -694,38 +652,36 @@ def bfs_hops(seeds: DataFrame, edges: DataFrame, max_hops: int) -> DataFrame:
     bounded at ``max_hops``. seeds: (id); edges: (src, dst), directed.
 
     Scale shape: each round is ONE equi-join (frontier x edges, shuffle
-    on src) + a distinct + an anti-join against the settled set — the
-    frontier is the only growing state, and it is materialized per
-    round so the loop plan stays constant-size. A node enters the
-    settled set the first round it is reached, which IS its BFS
-    distance, so no re-relaxation is ever needed (unit weights)."""
-    ed = edges.select("src", "dst").cache()
-    ed.count()
-    # dist/new are loop-carried: ALWAYS checkpoint (never env-switched
-    # persist) or the self-referencing plan regrows every round — see
-    # materialize() docstring
-    dist = materialize(
-        seeds.select("id", F.lit(0).alias("hops")), force_checkpoint=True
-    )
-    frontier = dist.select("id")
-    for d in range(1, max_hops + 1):
+    on src) + a distinct + an anti-join against the reached set. The
+    state is (settled, frontier): ``settled`` holds the nodes reached
+    before the frontier, so the next round's settled set is a narrow
+    union of two checkpoints and the frontier is computed exactly once,
+    by the probe that counts the reached set. A node enters the frontier
+    the first round it is reached, which IS its BFS distance, so no
+    re-relaxation is ever needed (unit weights). The frontier stops
+    expanding at ``max_hops``, so the reached count stops growing and
+    the probe ends the loop."""
+    ed = materialize(edges.select("src", "dst"))
+
+    def expand(state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+        settled, frontier = state
+        reached = settled.unionAll(frontier)
         nxt = (
-            frontier.join(ed, frontier.id == ed.src)
-            .select(F.col("dst").alias("id"))
+            frontier.filter(F.col("hops") < max_hops)
+            .join(ed, frontier.id == ed.src)
+            .select(F.col("dst").alias("id"), (F.col("hops") + 1).alias("hops"))
             .distinct()
         )
-        new = materialize(
-            nxt.join(dist, "id", "left_anti").select(
-                "id", F.lit(d).alias("hops")
-            ),
-            force_checkpoint=True,
-        )
-        if not new.head(1):
-            break
-        dist = materialize(dist.unionAll(new), force_checkpoint=True)
-        frontier = new.select("id")
-    ed.unpersist()
-    return dist
+        return reached, nxt.join(reached, "id", "left_anti")
+
+    start = seeds.select("id", F.lit(0).alias("hops"))
+    settled, frontier = fixed_point(
+        (start.limit(0), start),
+        expand,
+        max_iters=max_hops + 2,  # the count repeats by then: never warns
+        probe=lambda state: state[0].unionAll(state[1]).count(),
+    )
+    return settled.unionAll(frontier)
 
 
 @register(

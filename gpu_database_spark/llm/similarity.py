@@ -1397,13 +1397,8 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonical loads the report's inputs are layout-independent.)
     # Materialized: the brute-force baseline feeds two consumers per
     # method x three methods — without one execution point it would
-    # re-run six times per invocation. eager=False (r14): the report's
-    # single final collect materializes it once; the five method
-    # branches become independent stages of ONE job that the scheduler
-    # can overlap, instead of five serial blocking builds.
-    exact = materialize(
-        sim_topk_cosine(spark, sf_dir).select("qid", "cid"), eager=False
-    )
+    # re-run six times per invocation.
+    exact = materialize(sim_topk_cosine(spark, sf_dir).select("qid", "cid"))
 
     def recall_of(name: str, approx: DataFrame) -> DataFrame:
         hits = exact.join(approx.select("qid", "cid"), ["qid", "cid"])
@@ -1431,7 +1426,7 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate frame — the composed index is the report's most
     # expensive pipeline and would otherwise run twice.
     e = load_table(spark, sf_dir, "embeddings", spread=True)
-    scored = materialize(_ivf_pq_adc_scores(spark, sf_dir, e), eager=False)
+    scored = materialize(_ivf_pq_adc_scores(spark, sf_dir, e))
     ivf_pq = recall_of("ivf_pq", _ivf_pq_topk(scored).filter(F.col("rk") <= TOP_K))
     rerank = recall_of(
         "ivf_pq_rerank", _rerank_topk(e, scored).filter(F.col("rk") <= TOP_K)

@@ -113,11 +113,15 @@ def spread_scan(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
 
     The partitioner hashes every column of the (already projected)
     frame — pass ``columns=`` to ``load_table`` so the exchange carries
-    and hashes ONLY the columns the query reads (VERDICT r13 #2: an
-    unprojected lineitem spread shuffled all 16 columns for a 4-column
-    query). Caveats: all projected columns must be hashable types (no
-    MapType), and fully-duplicate rows colocate — acceptable here
-    because every fixture projection includes near-unique measures."""
+    and hashes ONLY the columns the query reads (an unprojected
+    lineitem spread shuffled all 16 columns for a 4-column query).
+    Caveats: all projected columns must be hashable types (no MapType),
+    and fully-duplicate rows colocate, so the spread is only as even as
+    the projection is distinct. Not every projection is near-unique:
+    ``agg_mean_families`` spreads (l_returnflag, l_quantity), about 150
+    distinct rows at every fixture scale — still several per partition
+    at 32 cores, but a projection with fewer distinct rows than
+    partitions would leave cores idle."""
     n_par = spark.sparkContext.defaultParallelism
     if _n_row_groups(path) >= max(2, n_par // 2):
         return df

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from gpu_database_spark.llm.graphrank import (
@@ -45,10 +46,43 @@ def test_pagerank_matches_numpy(spark, sf_dir):
     assert worst < 1e-12, f"max |spark - numpy| = {worst}"
 
 
-def test_pagerank_leaves_no_persistent_rdd_after_release_all(spark, sf_dir):
-    """Every block a pagerank call persists (the edge-degree frame and
-    the rank checkpoints) is owned by materialize, so release_all frees
-    it: nothing the call created outlives the query."""
+def _loop_calls():
+    """One call per loop on the fixed-point driver: name -> run(d),
+    where d is the documents table and run returns the loop's frame."""
+    from gpu_database_spark.llm.dedup import connected_components
+    from gpu_database_spark.llm.graphrank import (
+        BFS_MAX_HOPS,
+        BFS_N_SEEDS,
+        KCORE_K,
+        bfs_hops,
+        hits,
+        kcore,
+        label_propagation,
+    )
+
+    def nodes(d):
+        return d.select(F.col("doc_id").alias("id"))
+
+    return {
+        "pagerank": lambda d: pagerank(nodes(d), synth_edges(d), N_ITERS),
+        "kcore": lambda d: kcore(nodes(d), synth_edges(d), KCORE_K),
+        "label_propagation": lambda d: label_propagation(nodes(d), synth_edges(d)),
+        "hits": lambda d: hits(nodes(d), synth_edges(d)),
+        "bfs_hops": lambda d: bfs_hops(
+            nodes(d).filter(F.col("id") < BFS_N_SEEDS), synth_edges(d), BFS_MAX_HOPS
+        ),
+        "connected_components": lambda d: connected_components(
+            nodes(d),
+            synth_edges(d).select(F.col("src").alias("a"), F.col("dst").alias("b")),
+        ),
+    }
+
+
+@pytest.mark.parametrize("loop", sorted(_loop_calls()))
+def test_driver_loop_leaves_no_persistent_rdd_after_release_all(spark, sf_dir, loop):
+    """Every block a loop persists (its static edge frame and every
+    round's checkpoint) is owned by the materialize module, so
+    release_all frees it: nothing the call created outlives the query."""
     from gpu_database_spark.functions.materialize import release_all
 
     jsc = spark.sparkContext._jsc
@@ -57,10 +91,9 @@ def test_pagerank_leaves_no_persistent_rdd_after_release_all(spark, sf_dir):
         return set(jsc.getPersistentRDDs().keySet().toArray())
 
     d = load_table(spark, sf_dir, "documents")
-    nodes = d.select(F.col("doc_id").alias("id"))
     before = persistent()
-    pagerank(nodes, synth_edges(d), N_ITERS).collect()
-    assert persistent() - before, "pagerank persisted nothing: test is vacuous"
+    _loop_calls()[loop](d).collect()
+    assert persistent() - before, f"{loop} persisted nothing: test is vacuous"
     release_all(spark)
     assert not persistent() - before
 
