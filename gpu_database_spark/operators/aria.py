@@ -32,10 +32,12 @@ Data model:
   [0][0], database.h:10-22) pack the table id into the key — the
   reservation algebra is table-agnostic.
 
-Scale notes (100 TB): each epoch is 3 shuffles (reserve groupBy,
-analyze join+groupBy, install join) all on `key` or `txn_id`; the
-retry loop localCheckpoints the table each epoch to cut the growing
-lineage (the one real perf trap of iterative DataFrame programs).
+Scale notes (100 TB): on run_batch's distributed path each epoch is
+two keyed shuffles (reserve groupBy, analyze join+groupBy) plus the
+Collect-phase renumber; the retry loop localCheckpoints the live op
+set each epoch to cut the growing lineage (the one real perf trap of
+iterative DataFrame programs), and the table is touched once, by the
+install of the merged winner overlay after the last epoch.
 A broadcast-sized batch skips all of that: on run_batch's local path
 the batch and its winners are driver-built Arrow ``LocalRelation``s
 (functions/local.py), so nothing runs on the cluster before the
@@ -45,7 +47,9 @@ broadcast winners, plus their union) is the only distributed work.
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -86,8 +90,8 @@ def analyze(ops: DataFrame, reservations: DataFrame) -> DataFrame:
     )
 
 
-def commit_decision(flags: DataFrame, reorder: bool) -> DataFrame:
-    """Committed txn ids under the chosen abort rule.
+def abort_rule(reorder: bool) -> Column:
+    """The abort predicate over a flags frame's (raw, war, waw).
 
     reorder=False: abort iff waw | raw   (TrancM_func.cuh:207-227)
     reorder=True : abort iff waw | (raw & war) — Aria's deterministic
@@ -95,20 +99,32 @@ def commit_decision(flags: DataFrame, reorder: bool) -> DataFrame:
                    the equivalent `!raw || !war` at :187).
     """
     if reorder:
-        keep = ~F.col("waw") & ~(F.col("raw") & F.col("war"))
-    else:
-        keep = ~F.col("waw") & ~F.col("raw")
-    return flags.filter(keep).select("txn_id")
+        return F.col("waw") | (F.col("raw") & F.col("war"))
+    return F.col("waw") | F.col("raw")
 
 
-def winners(ops: DataFrame, committed: DataFrame, new_value: Column) -> DataFrame:
+def commit_decision(flags: DataFrame, reorder: bool) -> DataFrame:
+    """Committed txn ids: the flag rows that :func:`abort_rule` keeps."""
+    return flags.filter(~abort_rule(reorder)).select("txn_id")
+
+
+def default_new_value() -> Column:
+    """Deterministic speculative write payload: a hash of the writing
+    (txn, op, key) — the seeded-reproducibility analogue of the
+    reference's cuRAND value generation (kv.cuh:72-78). The DataFrame
+    twin of the md5 that run_batch's local path computes on the driver."""
+    return F.md5(
+        F.concat_ws(":", F.col("txn_id"), F.col("op_idx"), F.col("key"))
+    )
+
+
+def winners(ops: DataFrame, committed: DataFrame) -> DataFrame:
     """One winning (key, value) per key among committed update ops.
 
     Deterministic resolution: smallest committed Tid, then its last op
     in op order (row_number over (key) ordered by txn_id asc, op_idx
-    desc — SURVEY.md §3.2 step 4). ``new_value`` is the speculative
-    write expression (may reference txn_id/op_idx/key), the analogue of
-    the reference's device value regeneration (src/cuda/kv.cuh:72-78).
+    desc — SURVEY.md §3.2 step 4). The value is
+    :func:`default_new_value` of the winning op.
     """
     w = Window.partitionBy("key").orderBy(F.col("txn_id").asc(), F.col("op_idx").desc())
     return (
@@ -116,7 +132,7 @@ def winners(ops: DataFrame, committed: DataFrame, new_value: Column) -> DataFram
         .join(committed, "txn_id", "left_semi")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select("key", new_value.alias("value"))
+        .select("key", default_new_value().alias("value"))
     )
 
 
@@ -142,13 +158,6 @@ def install(table: DataFrame, winning: DataFrame) -> DataFrame:
 
 
 @dataclass
-class EpochResult:
-    committed: list[int]
-    aborted: list[int]
-    table: DataFrame
-
-
-@dataclass
 class BatchResult:
     """Result of :func:`run_batch`.
 
@@ -156,60 +165,17 @@ class BatchResult:
     commit order (epoch by epoch, Tid-ascending within an epoch) —
     retried transactions are renumbered internally per the reference's
     Collect phase (TransctionManager.cuh:176-184) but reported under
-    the id the caller submitted. On the fully distributed path it is
-    only populated when ``collect_commit_order=True``; the lazy
-    ``commit_order_df`` (epoch: int, txn_id: long, orig_tid: long) is
-    always available there and never touches the driver.
+    the id the caller submitted. Only the local path fills it. The
+    distributed path leaves it empty and sets the lazy
+    ``commit_order_df`` (epoch: int, txn_id: long, orig_tid: long)
+    instead, which never touches the driver; so ``commit_order_df is
+    None`` tells which path ran.
     """
 
     table: DataFrame
     commit_order: list[int] = field(default_factory=list)
     epochs: int = 0
     commit_order_df: DataFrame | None = None
-
-
-def default_new_value() -> Column:
-    """Deterministic speculative write payload: a hash of the writing
-    (txn, op, key) — the seeded-reproducibility analogue of the
-    reference's cuRAND value generation (kv.cuh:72-78)."""
-    return F.md5(
-        F.concat_ws(":", F.col("txn_id"), F.col("op_idx"), F.col("key"))
-    )
-
-
-def run_epoch(
-    table: DataFrame,
-    ops: DataFrame,
-    reorder: bool = False,
-    new_value: Column | None = None,
-) -> EpochResult:
-    """One Execute→Reserve→Analyze→Install pass (test_one_epoch,
-    src/database/ycsb/db.h:111-125). Returns committed/aborted Tids and
-    the post-install table (lazy)."""
-    if new_value is None:
-        new_value = default_new_value()
-    res = reserve(ops)
-    flags = analyze(ops, res)
-    # ONE driver round-trip per epoch: the flag rows are one per live
-    # txn (a txn with ops always joins its own reservations), ~batch
-    # size — the same small D2H copy the reference's Collect does
-    # (TransctionManager.cuh:174). Commit decisions fall out locally.
-    flag_rows = flags.collect()
-    committed_ids, aborted = [], []
-    for r in flag_rows:
-        if reorder:
-            abort = r.waw or (r.raw and r.war)
-        else:
-            abort = r.waw or r.raw
-        (aborted if abort else committed_ids).append(r.txn_id)
-    committed_ids.sort()
-    aborted.sort()
-    committed = local_frame(
-        ops.sparkSession, [(t,) for t in committed_ids], "txn_id long"
-    )
-    win = winners(ops, F.broadcast(committed), new_value)
-    new_table = install(table, win)
-    return EpochResult(committed_ids, aborted, new_table)
 
 
 def _protocol_local(
@@ -317,11 +283,8 @@ def run_batch(
     table: DataFrame,
     ops: DataFrame,
     reorder: bool = False,
-    new_value: Column | None = None,
     max_epochs: int = 1000,
-    rmw: bool = False,
     local_threshold: int = 100_000,
-    collect_commit_order: bool | None = None,
     strict: bool = True,
 ) -> BatchResult:
     """Epoch loop until every txn commits (DB::test, db.h:104-109).
@@ -338,16 +301,11 @@ def run_batch(
     each epoch the smallest live Tid has no older conflictor, so it
     commits (metadatahelper.cuh:51-55 — min-Tid reservations never lose).
 
-    ``rmw``: the reference workload never reads-modifies-writes —
-    speculative values are regenerated, not derived from reads
-    (kv.cuh:72-78) — so by default the evolving table is write-only
-    during the batch and we install ONE merged overlay at the end
-    (later epochs shadow earlier ones). That removes the per-epoch
-    full-table materialization entirely: per-epoch cost is one small
-    flags collect + a tiny ops checkpoint. Pass ``rmw=True`` if your
-    ``new_value`` expression reads current table state; the loop then
-    installs + localCheckpoints the table every epoch (the lineage
-    trap fix, SURVEY.md §4.2).
+    The reference workload never reads-modifies-writes — speculative
+    values are regenerated, not derived from reads (kv.cuh:72-78) — so
+    the table is write-only during the batch: both paths install ONE
+    merged winner overlay at the end (later epochs shadow earlier ones)
+    instead of materializing the table every epoch.
 
     ``local_threshold``: batches of at most this many ops run the epoch
     protocol on the driver in one pass — an OLTP epoch batch is
@@ -362,34 +320,19 @@ def run_batch(
     work. Larger batches run fully distributed; equivalence of the
     paths is test-enforced
     (tests/test_aria.py::test_local_fast_path_equals_distributed).
-
-    ``collect_commit_order``: whether to materialize the driver-side
-    ``BatchResult.commit_order`` list. Default (``None``) resolves to
-    True on the local fast path and the rmw path — where the per-txn
-    rows are already on the driver, so the list is free — and False on
-    the fully distributed path, where building it would collect O(batch)
-    txn ids per epoch. The distributed path always exposes the lazy
-    ``commit_order_df`` instead; pass ``True`` to force the list there
-    (tests do, at test scale).
     """
-    probe = None
-    if not rmw and new_value is None:
-        # ONE bounded collect decides the path AND delivers the rows if
-        # local (no job at all when ops is a LocalRelation): collecting
-        # limit(threshold+1) never exceeds the local budget.
-        probe = ops.limit(local_threshold + 1).collect()
-    if probe is not None and len(probe) <= local_threshold:
-        import hashlib
-
-        rows = [(r.txn_id, r.op_idx, r.key, r.is_update) for r in probe]
-        result = BatchResult(table=table)
-        if not rows:
+    result = BatchResult(table=table)
+    # ONE bounded collect decides the path AND delivers the rows if
+    # local (no job at all when ops is a LocalRelation): collecting
+    # limit(threshold+1) never exceeds the local budget.
+    probe = ops.limit(local_threshold + 1).collect()
+    if len(probe) <= local_threshold:
+        if not probe:
             return result
-        winner, commit_order, epochs = _protocol_local(
+        rows = [(r.txn_id, r.op_idx, r.key, r.is_update) for r in probe]
+        winner, result.commit_order, result.epochs = _protocol_local(
             rows, reorder, max_epochs, strict=strict
         )
-        result.commit_order = commit_order
-        result.epochs = epochs
         win_rows = [
             (k, hashlib.md5(f"{t}:{op}:{k}".encode()).hexdigest())
             for k, (t, op) in sorted(winner.items())
@@ -398,52 +341,18 @@ def run_batch(
             win = local_frame(ops.sparkSession, win_rows, "key long, value string")
             result.table = install(table, F.broadcast(win))
         return result
-    if new_value is None:
-        new_value = default_new_value()
-    result = BatchResult(table=table)
-    live = ops
-    if live.isEmpty():
-        return result
-    if not rmw:
-        # Carry the originally submitted Tid through Collect-phase
-        # renumbering so commit evidence reports caller ids.
-        live = live.withColumn("orig_tid", F.col("txn_id"))
-    orig_map: dict[int, int] | None = None  # rmw path: current -> original Tid
+    # Distributed path: commit decisions, winner overlay and the
+    # Collect-phase renumbering all stay DataFrame-side; the only driver
+    # traffic per epoch is the bounded aborted-set probe below, so a
+    # 100M-txn batch never ships per-txn rows to the driver. The
+    # originally submitted Tid rides along as orig_tid so commit
+    # evidence reports caller ids.
+    live = ops.withColumn("orig_tid", F.col("txn_id"))
+    abort = abort_rule(reorder)
     overlays: list[DataFrame] = []
     co_frames: list[DataFrame] = []
     for epoch in range(max_epochs):
-        if rmw:
-            ep = run_epoch(table, live, reorder=reorder, new_value=new_value)
-            table = materialize(ep.table, force_checkpoint=True)
-            ep_committed, aborted = ep.committed, ep.aborted
-            if orig_map is None:
-                orig_map = {t: t for t in ep_committed + aborted}
-            if collect_commit_order is not False:
-                # free: run_epoch already collected the per-txn flag rows
-                result.commit_order.extend(orig_map[t] for t in ep_committed)
-            result.epochs += 1
-            if not aborted:
-                break
-            orig_map = {i + 1: orig_map[t] for i, t in enumerate(aborted)}
-            aborted_df = local_frame(
-                live.sparkSession,
-                [(t, i + 1) for i, t in enumerate(aborted)],
-                "txn_id long, _new_tid long",
-            )
-            live = (
-                live.join(F.broadcast(aborted_df), "txn_id")
-                .select(
-                    F.col("_new_tid").alias("txn_id"), "op_idx", "key", "is_update"
-                )
-                .transform(lambda d: materialize(d, force_checkpoint=True))
-            )
-            continue
-        # Distributed path: commit decisions, winner overlay and the
-        # Collect-phase renumbering all stay DataFrame-side. With the
-        # default collect_commit_order=None the only driver traffic per
-        # epoch is the bounded aborted-set probe below — a 100M-txn
-        # batch never ships per-txn rows to the driver.
-        # (analyze() inlined to carry orig_tid through the groupBy.)
+        # analyze() inlined to carry orig_tid through the groupBy.
         j = live.join(reserve(live), "key")
         older_w = F.col("wts").isNotNull() & (F.col("wts") < F.col("txn_id"))
         older_r = F.col("rts") < F.col("txn_id")
@@ -453,35 +362,24 @@ def run_batch(
             F.max(F.col("is_update") & older_w).alias("waw"),
             F.min("orig_tid").alias("orig_tid"),
         )
-        if reorder:
-            abort_col = F.col("waw") | (F.col("raw") & F.col("war"))
-        else:
-            abort_col = F.col("waw") | F.col("raw")
-        committed = flags.filter(~abort_col).select("txn_id", "orig_tid")
-        aborted_df = flags.filter(abort_col).select("txn_id")
+        committed = flags.filter(~abort).select("txn_id", "orig_tid")
+        aborted = flags.filter(abort).select("txn_id")
         overlays.append(
-            winners(live, committed.select("txn_id"), new_value).withColumn(
+            winners(live, committed.select("txn_id")).withColumn(
                 "_epoch", F.lit(epoch)
             )
         )
         co_frames.append(
-            committed.select(
-                F.lit(epoch).alias("epoch"), "txn_id", "orig_tid"
-            )
+            committed.select(F.lit(epoch).alias("epoch"), "txn_id", "orig_tid")
         )
-        if collect_commit_order:
-            result.commit_order.extend(
-                r.orig_tid for r in committed.orderBy("txn_id").collect()
-            )
         result.epochs += 1
-        n_aborted = aborted_df.limit(1).count()
-        if n_aborted == 0:
+        if aborted.limit(1).count() == 0:
             break
         # Collect phase: compact aborted txns to the queue front with
         # fresh sequential Tids 1..m, order-preserving
         # (TransctionManager.cuh:176-184) — two-level renumber, no
         # single-partition global window (see global_renumber).
-        renum = global_renumber(aborted_df, "txn_id")
+        renum = global_renumber(aborted, "txn_id")
         live = (
             live.join(renum, "txn_id")
             .select(
@@ -500,22 +398,15 @@ def run_batch(
                 f"aria: transactions still live after max_epochs={max_epochs} "
                 "— raise max_epochs"
             )
-    if co_frames:
-        codf = co_frames[0]
-        for c in co_frames[1:]:
-            codf = codf.unionAll(c)
-        result.commit_order_df = codf
-    if not rmw and overlays:
+    if overlays:
+        result.commit_order_df = reduce(DataFrame.unionAll, co_frames)
         # Later epochs shadow earlier writes to the same key.
-        allw = overlays[0]
-        for o in overlays[1:]:
-            allw = allw.unionAll(o)
         w = Window.partitionBy("key").orderBy(F.col("_epoch").desc())
         final_w = (
-            allw.withColumn("_rn", F.row_number().over(w))
+            reduce(DataFrame.unionAll, overlays)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("key", "value")
         )
-        table = install(table, final_w)
-    result.table = table
+        result.table = install(table, final_w)
     return result

@@ -51,14 +51,26 @@ _FLAGS_SQL = """
 """
 
 
-def fixture_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deterministic lineitem-derived transaction batch."""
+def fixture_ops(spark: SparkSession, sf_dir: str, keys: int = 211) -> DataFrame:
+    """The deterministic lineitem-derived transaction batch over
+    ``keys`` keys: the hot 211-key space by default; a wider one means
+    lower contention, so a multi-epoch loop converges in a handful of
+    epochs at every fixture scale instead of dozens."""
     l = load_table(spark, sf_dir, "lineitem")
     return l.select(
         F.col("l_orderkey").alias("txn_id"),
         F.col("l_linenumber").cast("int").alias("op_idx"),
-        (F.col("l_partkey") % 211 + 1).alias("key"),
+        (F.col("l_partkey") % keys + 1).alias("key"),
         (F.col("l_quantity") >= 30).alias("is_update"),
+    )
+
+
+def init_table(spark: SparkSession, keys: int = 211) -> DataFrame:
+    """The base table the Aria install queries write over: keys
+    1..``keys``, each valued md5('init:<key>')."""
+    return spark.range(1, keys + 1).select(
+        F.col("id").alias("key"),
+        F.md5(F.concat(F.lit("init:"), F.col("id").cast("string"))).alias("value"),
     )
 
 
@@ -113,8 +125,8 @@ def aria_commit_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = aria.analyze(ops, aria.reserve(ops))
     return flags.select(
         "txn_id",
-        (~F.col("waw") & ~F.col("raw")).alias("commit_plain"),
-        (~F.col("waw") & ~(F.col("raw") & F.col("war"))).alias("commit_reorder"),
+        (~aria.abort_rule(False)).alias("commit_plain"),
+        (~aria.abort_rule(True)).alias("commit_reorder"),
     ).orderBy("txn_id")
 
 
@@ -248,10 +260,11 @@ def aria_metadata_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def aria_epoch_loop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL multi-epoch Aria loop, oracle-gated (VERDICT r7 ask #5):
-    run_batch's fully DISTRIBUTED path (local_threshold=0 — per-epoch
-    commit decisions, winner overlays and Collect-phase renumbering all
-    stay DataFrame-side; reference loop: db.h:104-125) over a
+    """The FULL multi-epoch Aria loop, oracle-gated so the hash check
+    covers more than one epoch's stages: run_batch's fully DISTRIBUTED
+    path (local_threshold=0 — per-epoch commit decisions, winner
+    overlays and Collect-phase renumbering all stay DataFrame-side;
+    reference loop: db.h:104-125) over a
     deterministic lineitem-derived batch (txn_id <= 150, keyspace 1009)
     against an md5-seeded base table. The DuckDB oracle replays the
     identical epoch protocol as a recursive CTE — reservations, flag
@@ -265,28 +278,12 @@ def aria_epoch_loop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     per epoch); 4 epochs at the driver/bench scale factors."""
     from gpu_database_spark.operators.aria import run_batch
 
-    ops = fixture_ops_wide(spark, sf_dir).filter(F.col("txn_id") <= 150)
-    base = spark.range(1, 1010).select(
-        F.col("id").alias("key"),
-        F.md5(F.concat(F.lit("init:"), F.col("id").cast("string"))).alias("value"),
-    )
+    ops = fixture_ops(spark, sf_dir, keys=1009).filter(F.col("txn_id") <= 150)
+    base = init_table(spark, 1009)
     result = run_batch(base, ops, reorder=True, local_threshold=0)
     return (
         result.table.withColumn("epochs", F.lit(result.epochs).cast("long"))
         .orderBy("key")
-    )
-
-
-def fixture_ops_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fixture_ops with a wider (1009) keyspace: lower contention, so
-    the multi-epoch loop converges in a handful of epochs at every
-    fixture scale instead of dozens."""
-    l = load_table(spark, sf_dir, "lineitem")
-    return l.select(
-        F.col("l_orderkey").alias("txn_id"),
-        F.col("l_linenumber").cast("int").alias("op_idx"),
-        (F.col("l_partkey") % 1009 + 1).alias("key"),
-        (F.col("l_quantity") >= 30).alias("is_update"),
     )
 
 
@@ -355,9 +352,9 @@ def aria_run_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-epoch run_batch (reorder mode) over a lineitem-derived batch
     (hot 211-key keyspace -> ~118 epochs at sf0.01) against a
     deterministic base table; returns the final table state plus commit
-    metadata. ORACLE-GATED since r11 (retiring the flagship from
-    rows-only status, r10 VERDICT ask #2): the DuckDB side replays the
-    identical Execute->Reserve->Analyze->Install->Collect fixpoint as a
+    metadata. Oracle-gated, so the flagship is hash-checked rather than
+    rows-only: the DuckDB side replays the identical
+    Execute->Reserve->Analyze->Install->Collect fixpoint as a
     bounded recursive CTE — reservations, reorder-mode commit rule,
     order-preserving renumber, latest-epoch/min-Tid/last-op winner per
     key (reference loop: db.h:104-125, TrancM_func.cuh:181-250,
@@ -372,10 +369,7 @@ def aria_run_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gpu_database_spark.operators.aria import run_batch
 
     ops = fixture_ops(spark, sf_dir).filter(F.col("txn_id") <= 3000)
-    base = spark.range(1, 212).select(
-        F.col("id").alias("key"),
-        F.md5(F.concat(F.lit("init:"), F.col("id").cast("string"))).alias("value"),
-    )
+    base = init_table(spark)
     result = run_batch(base, ops, reorder=True)
     return (
         result.table.withColumn("epochs", F.lit(result.epochs).cast("long"))
@@ -479,10 +473,7 @@ def aria_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gpu_database_spark.operators.aria import run_batch
 
     ops = fixture_ops(spark, sf_dir).filter(F.col("txn_id") <= 3000)
-    base = spark.range(1, 212).select(
-        F.col("id").alias("key"),
-        F.md5(F.concat(F.lit("init:"), F.col("id").cast("string"))).alias("value"),
-    )
+    base = init_table(spark)
     result = run_batch(
         base, ops, reorder=True, max_epochs=ASOF_EPOCHS, strict=False
     )
@@ -532,11 +523,8 @@ def aria_install(spark: SparkSession, sf_dir: str) -> DataFrame:
     TrancM_func.cuh:188-197)."""
     ops = fixture_ops(spark, sf_dir)
     committed = aria.commit_decision(aria.analyze(ops, aria.reserve(ops)), reorder=True)
-    base = spark.range(1, 212).select(
-        F.col("id").alias("key"),
-        F.md5(F.concat(F.lit("init:"), F.col("id").cast("string"))).alias("value"),
-    )
-    win = aria.winners(ops, committed, aria.default_new_value())
+    base = init_table(spark)
+    win = aria.winners(ops, committed)
     merged = aria.install(base, win)
     return (
         merged.join(win.select("key", F.col("value").alias("_w")), "key", "left")

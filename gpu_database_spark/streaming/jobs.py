@@ -265,10 +265,11 @@ def aria_foreach_batch_install(
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
         ops = batch_to_ops(batch_df)
         result = aria.run_batch(state["table"], ops, reorder=True)
-        # Checkpoint per micro-batch: the install is a lazy full-outer
-        # join over the previous table; without truncation the plan
-        # would deepen by one join per batch (O(N^2) re-evaluation and
-        # eventual analysis stack overflow on a long-running stream).
+        # Checkpoint per micro-batch: the install is a lazy broadcast
+        # anti-join of the previous table plus a union of the winners;
+        # without truncation the plan would deepen by one join per batch
+        # (O(N^2) re-evaluation and eventual analysis stack overflow on
+        # a long-running stream).
         state["table"] = result.table.localCheckpoint(eager=True)
         state["epochs"] += result.epochs
         state["committed"].extend(result.commit_order)

@@ -67,6 +67,22 @@ def serial_oracle(table, ops_rows, reorder, max_epochs=100):
 
 
 WORKLOAD_BATCH = dict(batch_size=40, max_ops=8, keys_max=60, write_rate=0.4, seed=11)
+N_OPS = len(gen.transactions_local(**WORKLOAD_BATCH))
+
+
+def commit_order(result):
+    """Original ids in commit order, whichever path ran: the local
+    path's list, or the distributed path's lazy ``commit_order_df``."""
+    if result.commit_order_df is None:
+        return result.commit_order
+    co = result.commit_order_df.orderBy("epoch", "txn_id").collect()
+    return [r.orig_tid for r in co]
+
+
+def first_epoch_commits(ops, reorder):
+    """Txn ids one Reserve -> Analyze -> commit pass commits."""
+    flags = aria.analyze(ops, aria.reserve(ops))
+    return {r.txn_id for r in aria.commit_decision(flags, reorder).collect()}
 
 
 @pytest.fixture(scope="module")
@@ -87,7 +103,7 @@ def workload(spark):
     [
         pytest.param(source, lt, reorder, id=f"{prefix}{lt}-{reorder}")
         for source, prefix in (("list", ""), ("gen", "gen-"))
-        for lt in (0, 100_000)
+        for lt in (0, 100_000, N_OPS, N_OPS - 1)
         for reorder in (False, True)
     ],
 )
@@ -97,25 +113,26 @@ def test_final_state_matches_serial_oracle(
     """Both execution paths (0 -> fully distributed DataFrame algebra,
     100k -> driver-local fast path) must match the serial-order replay,
     for ops built by ``createDataFrame(list)`` (an RDD leaf) and by
-    ``gen.transactions`` (an Arrow LocalRelation) alike."""
+    ``gen.transactions`` (an Arrow LocalRelation) alike. A batch of
+    exactly ``local_threshold`` ops runs locally, one more op than the
+    threshold runs distributed."""
     table_rows, table, ops_rows, ops = workload
+    assert len(ops_rows) == N_OPS
     if source == "gen":
         ops = gen.transactions(spark, **WORKLOAD_BATCH)
     result = aria.run_batch(
-        table,
-        ops,
-        reorder=reorder,
-        local_threshold=local_threshold,
-        collect_commit_order=True,
+        table, ops, reorder=reorder, local_threshold=local_threshold
     )
+    assert (result.commit_order_df is None) == (N_OPS <= local_threshold)
     got = {r.key: r.value for r in result.table.collect()}
     want, epoch_commits = serial_oracle(table_rows, ops_rows, reorder)
     assert got == want
     assert result.epochs == len(epoch_commits)
     # every txn commits exactly once across epochs, reported under the
     # ORIGINAL id it was submitted with (not the retry renumbering)
-    assert len(result.commit_order) == sum(epoch_commits)
-    assert sorted(result.commit_order) == sorted({t for t, _, _, _ in ops_rows})
+    order = commit_order(result)
+    assert len(order) == sum(epoch_commits)
+    assert sorted(order) == sorted({t for t, _, _, _ in ops_rows})
 
 
 def test_local_path_runs_no_job_before_install(spark, workload, job_group):
@@ -132,37 +149,19 @@ def test_local_path_runs_no_job_before_install(spark, workload, job_group):
     assert got == serial_oracle(table_rows, ops_rows, reorder=True)[0]
 
 
-def test_overlay_equals_rmw_install_path(spark, workload):
-    """The end-of-batch overlay install (non-rmw default) and the
-    per-epoch install+checkpoint path (rmw=True) must produce the same
-    final table for read-independent value generators."""
-    _, table, _, ops = workload
-    overlay = aria.run_batch(
-        table, ops, reorder=False, local_threshold=0, collect_commit_order=True
-    )
-    rmw = aria.run_batch(table, ops, reorder=False, local_threshold=0, rmw=True)
-    assert sorted(map(tuple, overlay.table.collect())) == sorted(
-        map(tuple, rmw.table.collect())
-    )
-    assert overlay.commit_order == rmw.commit_order
-
-
 def test_local_fast_path_equals_distributed(spark, workload):
     _, table, _, ops = workload
     local = aria.run_batch(table, ops, reorder=True)
-    dist = aria.run_batch(
-        table, ops, reorder=True, local_threshold=0, collect_commit_order=True
-    )
-    assert local.commit_order == dist.commit_order
+    dist = aria.run_batch(table, ops, reorder=True, local_threshold=0)
+    assert local.commit_order_df is None
+    # the distributed path keeps commit evidence off the driver: the
+    # list stays empty and the lazy frame equals the local list
+    assert dist.commit_order == []
+    assert local.commit_order == commit_order(dist)
     assert local.epochs == dist.epochs
     assert sorted(map(tuple, local.table.collect())) == sorted(
         map(tuple, dist.table.collect())
     )
-    # default distributed path: list stays empty, lazy frame agrees
-    lazy = aria.run_batch(table, ops, reorder=True, local_threshold=0)
-    assert lazy.commit_order == []
-    co = lazy.commit_order_df.orderBy("epoch", "txn_id").collect()
-    assert [r.orig_tid for r in co] == dist.commit_order
 
 
 def test_deterministic_across_runs(spark, workload):
@@ -179,31 +178,27 @@ def test_deterministic_across_runs(spark, workload):
 def test_reorder_commits_superset_of_plain(spark, workload):
     """On the same (first) epoch, reorder-mode commits ⊇ plain commits
     (abort condition waw|(raw&war) implies waw|raw)."""
-    _, table, _, ops = workload
-    plain = aria.run_epoch(table, ops, reorder=False)
-    reorder = aria.run_epoch(table, ops, reorder=True)
-    assert set(plain.committed) <= set(reorder.committed)
+    _, _, _, ops = workload
+    assert first_epoch_commits(ops, False) <= first_epoch_commits(ops, True)
 
 
 def test_min_tid_never_aborts(spark, workload):
     """The smallest Tid holds every reservation it requests
     (metadatahelper.cuh:51-55) — it can never conflict, guaranteeing
     termination of the retry loop."""
-    _, table, ops_rows, ops = workload
+    _, _, ops_rows, ops = workload
     min_tid = min(t for t, _, _, _ in ops_rows)
-    ep = aria.run_epoch(table, ops, reorder=False)
-    assert min_tid in ep.committed
+    assert min_tid in first_epoch_commits(ops, False)
 
 
 def test_unique_committed_writer_per_key(spark, workload):
     """WAW aborts guarantee at most one committed writer per key per
     epoch — the property that makes the parallel install race-free
     (and why the reference can let winners race, TrancM_func.cuh:188-197)."""
-    _, table, _, ops = workload
+    _, _, _, ops = workload
     from pyspark.sql import functions as F
 
-    ep = aria.run_epoch(table, ops, reorder=True)
-    committed = spark.createDataFrame([(t,) for t in ep.committed], "txn_id long")
+    committed = aria.commit_decision(aria.analyze(ops, aria.reserve(ops)), True)
     writers = (
         ops.filter(F.col("is_update"))
         .join(committed, "txn_id", "left_semi")
@@ -223,14 +218,22 @@ def test_epoch_loop_terminates_and_commits_all(spark, workload):
     assert result.epochs < 50
 
 
-@pytest.mark.parametrize("reorder", [False, True])
-def test_reference_config_matches_serial_oracle(spark, reorder):
+@pytest.mark.parametrize(
+    "local_threshold,reorder",
+    [
+        pytest.param(lt, reorder, id=f"{prefix}{reorder}")
+        for lt, prefix in ((100_000, ""), (0, "dist-"))
+        for reorder in (False, True)
+    ],
+)
+def test_reference_config_matches_serial_oracle(spark, local_threshold, reorder):
     """Aria at the reference's ACTUAL workload configuration
     (``include/core/Transction.h:24-33`` / BASELINE.md: 199,999-row
     preload, 150 txns x U(0,30) ops, keys U(1,20000), write rate 0.4):
     final table must equal the serial-order replay and the epoch count
-    must match the oracle's retry schedule — the full-scale version of
-    the toy-size property tests above (VERDICT r6 #7)."""
+    must match the oracle's retry schedule, on the local path (the
+    default threshold) and the distributed one (0) — the full-scale
+    version of the toy-size property tests above."""
     n_rows, seed = 199_999, 42
     table = gen.kv_table_distributed(spark, n_rows, seed=seed)
     ops_rows = gen.transactions_local(
@@ -240,15 +243,16 @@ def test_reference_config_matches_serial_oracle(spark, reorder):
         ops_rows, "txn_id long, op_idx int, key long, is_update boolean"
     )
     result = aria.run_batch(
-        table, ops, reorder=reorder, collect_commit_order=True
+        table, ops, reorder=reorder, local_threshold=local_threshold
     )
+    assert (result.commit_order_df is None) == (local_threshold > 0)
     got = {r.key: r.value for r in result.table.collect()}
     init = {k: md5(f"{seed}:{k}") for k in range(1, n_rows + 1)}
     want, epoch_commits = serial_oracle(init, ops_rows, reorder)
     assert len(got) == n_rows
     assert got == want
     assert result.epochs == len(epoch_commits)
-    assert sorted(result.commit_order) == sorted({t for t, _, _, _ in ops_rows})
+    assert sorted(commit_order(result)) == sorted({t for t, _, _, _ in ops_rows})
 
 
 @pytest.mark.parametrize("local_threshold", [0, 100_000])
@@ -260,19 +264,19 @@ def test_snapshot_asof_is_prefix_of_full_run(spark, workload, local_threshold):
     exactly, on both the local fast path and the distributed path."""
     _, table, ops_rows, ops = workload
     full = aria.run_batch(
-        table, ops, reorder=True, collect_commit_order=True,
-        local_threshold=local_threshold,
+        table, ops, reorder=True, local_threshold=local_threshold
     )
     assert full.epochs > 2  # the horizon below must be mid-flight
     horizon = 2
     capped = aria.run_batch(
         table, ops, reorder=True, max_epochs=horizon, strict=False,
-        collect_commit_order=True, local_threshold=local_threshold,
+        local_threshold=local_threshold,
     )
     assert capped.epochs == horizon
-    n = len(capped.commit_order)
-    assert 0 < n < len(full.commit_order)
-    assert capped.commit_order == full.commit_order[:n]
+    full_order, capped_order = commit_order(full), commit_order(capped)
+    n = len(capped_order)
+    assert 0 < n < len(full_order)
+    assert capped_order == full_order[:n]
     # the capped table differs from the full table only on keys whose
     # winning write landed after the horizon
     got_capped = {r.key: r.value for r in capped.table.collect()}
