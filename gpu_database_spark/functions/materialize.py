@@ -52,8 +52,11 @@ _OWNED_RDD_IDS: set[int] = set()
 State = Union[DataFrame, tuple]
 
 
-def _owned(df: DataFrame, make: Callable[[], DataFrame]) -> DataFrame:
-    """Run ``make()`` and record the persistent RDDs it created.
+def track_persisted(
+    spark: SparkSession, make: Callable[[], DataFrame]
+) -> tuple[DataFrame, set[int]]:
+    """Run ``make()``; return its result and the ids of the persistent
+    RDDs it created.
 
     The persisted block (checkpoint RDD / InMemoryRelation RDD) is
     internal — its id isn't exposed by the DataFrame API (df.rdd is a
@@ -61,11 +64,31 @@ def _owned(df: DataFrame, make: Callable[[], DataFrame]) -> DataFrame:
     persistent-RDD set around the call. Materialization only ever runs
     from driver-serial operator code, so the diff cannot pick up a
     concurrent stranger."""
-    jsc = df.sparkSession.sparkContext._jsc
+    jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     out = make()
     after = set(jsc.getPersistentRDDs().keySet().toArray())
-    _OWNED_RDD_IDS.update(int(i) for i in after - before)
+    return out, {int(i) for i in after - before}
+
+
+def unpersist_rdds(spark: SparkSession, ids: set[int]) -> int:
+    """Unpersist the persistent RDDs among ``ids``; return how many
+    were still persisted."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    released = 0
+    for rid in ids:
+        jrdd = jmap.get(rid)
+        if jrdd is not None:
+            jrdd.unpersist(False)
+            released += 1
+    return released
+
+
+def _owned(df: DataFrame, make: Callable[[], DataFrame]) -> DataFrame:
+    """Run ``make()`` and record the persistent RDDs it created for
+    :func:`release_all`."""
+    out, ids = track_persisted(df.sparkSession, make)
+    _OWNED_RDD_IDS.update(ids)
     return out
 
 
@@ -164,13 +187,6 @@ def release_all(spark: SparkSession) -> int:
     """
     if not _OWNED_RDD_IDS:
         return 0
-    jsc = spark.sparkContext._jsc
-    jmap = jsc.getPersistentRDDs()
-    released = 0
-    for rid in list(_OWNED_RDD_IDS):
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-            released += 1
-        _OWNED_RDD_IDS.discard(rid)
+    released = unpersist_rdds(spark, _OWNED_RDD_IDS)
+    _OWNED_RDD_IDS.clear()
     return released

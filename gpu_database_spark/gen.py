@@ -13,7 +13,10 @@ Reference distributions (FIXTURES.md §B):
 Generation is host-side (numpy on the driver), mirroring the
 reference's host-side generate(), and lands in Arrow ``LocalRelation``s
 (:func:`~gpu_database_spark.functions.local.local_frame`): collecting
-or broadcasting a generated batch runs no Spark job. At bench scale
+a generated batch runs no Spark job, and the frame keeps its rows
+(:func:`~gpu_database_spark.functions.local.local_rows`), so Aria's
+driver-local path reads them without a collect. Broadcasting one
+still runs a small job (see functions/local.py). At bench scale
 (200k rows, 150 txns) this is trivially small. For cluster-scale
 synthetic data use ``kv_table_distributed`` (spark.range +
 hash-derived values, no driver materialization).

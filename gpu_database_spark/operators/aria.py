@@ -39,10 +39,12 @@ set each epoch to cut the growing lineage (the one real perf trap of
 iterative DataFrame programs), and the table is touched once, by the
 install of the merged winner overlay after the last epoch.
 A broadcast-sized batch skips all of that: on run_batch's local path
-the batch and its winners are driver-built Arrow ``LocalRelation``s
-(functions/local.py), so nothing runs on the cluster before the
-install, and the install (anti-join of the table against the
-broadcast winners, plus their union) is the only distributed work.
+the epochs run on the driver as numpy array passes over the batch
+(read straight from a ``local_frame``'s held Arrow rows, else from one
+bounded collect), and the winners come back as a driver-built Arrow
+``LocalRelation`` (functions/local.py), so nothing runs on the cluster
+before the install, and the install (anti-join of the table against
+the broadcast winners, plus their union) is the only distributed work.
 """
 
 from __future__ import annotations
@@ -51,10 +53,11 @@ import hashlib
 from dataclasses import dataclass, field
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gpu_database_spark.functions.local import local_frame
+from gpu_database_spark.functions.local import local_frame, local_rows
 from gpu_database_spark.functions.materialize import materialize
 
 
@@ -137,7 +140,8 @@ def winners(ops: DataFrame, committed: DataFrame) -> DataFrame:
 
 
 def install(table: DataFrame, winning: DataFrame) -> DataFrame:
-    """MERGE the winners over the live table.
+    """MERGE the winners over the live table; both are (key, value)
+    frames.
 
     Write-back of committed txns (TrancM_func.cuh:188-197). Upsert
     semantics: keys not present in the table are inserted (the
@@ -151,10 +155,7 @@ def install(table: DataFrame, winning: DataFrame) -> DataFrame:
     winner's value is never NULL (it is a generated write) and keys
     are unique on both sides.
     """
-    keep = table.select("key", "value").join(
-        F.broadcast(winning.select("key")), "key", "left_anti"
-    )
-    return keep.unionByName(winning.select("key", "value"))
+    return table.join(F.broadcast(winning), "key", "left_anti").unionByName(winning)
 
 
 @dataclass
@@ -179,66 +180,70 @@ class BatchResult:
 
 
 def _protocol_local(
-    rows: list, reorder: bool, max_epochs: int, strict: bool = True
+    rows: list[tuple] | np.ndarray,
+    reorder: bool,
+    max_epochs: int,
+    strict: bool = True,
 ) -> tuple[dict, list[int], int]:
-    """The epoch protocol over plain tuples, for broadcast-sized batches.
+    """The epoch protocol on the driver, in numpy, for broadcast-sized
+    batches.
 
-    Exactly the algebra of reserve/analyze/commit_decision/winners —
-    tests/test_aria.py proves local == distributed. Returns
+    ``rows``: (txn_id, op_idx, key, is_update) rows — a list of tuples
+    or an (n, 4) integer array. Exactly the algebra of
+    reserve/analyze/commit_decision/winners — tests/test_aria.py proves
+    local == distributed and tests/test_aria_properties.py checks it
+    against the plain-Python serial oracle. Returns
     (key -> (txn_id, op_idx) winning write, commit_order, epochs);
     later epochs shadow earlier ones, like the overlay path.
     commit_order reports ORIGINAL ids (pre-renumbering); winning
-    values still regenerate from the renumbered Tid, matching the
-    reference's device value generation on retried epochs.
+    values still regenerate from the epoch's Tid (the submitted id in
+    epoch 1, the renumbered one after), matching the reference's device
+    value generation on retried epochs.
     """
-    live = list(rows)
+    a = np.asarray(rows, dtype=np.int64).reshape(-1, 4)
+    op, upd = a[:, 1], a[:, 3].astype(bool)
+    keys, kid = np.unique(a[:, 2], return_inverse=True)
+    # Per live txn, ascending: the submitted id and the current Tid.
+    # tix maps each live op to its txn's position in those arrays.
+    orig, tix = np.unique(a[:, 0], return_inverse=True)
+    tid = orig
+    unreserved = np.iinfo(np.int64).max  # a key no Tid has reserved
     winner: dict = {}
     commit_order: list[int] = []
-    orig: dict | None = None  # current Tid -> originally submitted Tid
     epochs = 0
-    while live and epochs < max_epochs:
+    while len(orig) and epochs < max_epochs:
         epochs += 1
-        rts: dict = {}
-        wts: dict = {}
-        by_txn: dict = {}
-        for row in live:
-            t, _, k, u = row
-            rts[k] = min(rts.get(k, t), t)
-            if u:
-                wts[k] = min(wts.get(k, t), t)
-            by_txn.setdefault(t, []).append(row)
-        if orig is None:
-            orig = {t: t for t in by_txn}
-        flags: dict = {}
-        for t, _, k, u in live:
-            f = flags.setdefault(t, [False, False, False])  # raw, war, waw
-            if k in wts and wts[k] < t:
-                f[0] = True
-            if u and rts[k] < t:
-                f[1] = True
-            if u and k in wts and wts[k] < t:
-                f[2] = True
-        committed, aborted = [], []
-        for t in sorted(flags):
-            raw, war, waw = flags[t]
-            abort = (waw or (raw and war)) if reorder else (waw or raw)
-            (aborted if abort else committed).append(t)
-        for t in committed:
-            for _, op, k, u in sorted(by_txn[t], key=lambda r: r[1]):
-                if u:
-                    winner[k] = (t, op)
-        commit_order.extend(orig[t] for t in committed)
-        if not aborted:
-            live = []
-            break
-        renum = {t: i + 1 for i, t in enumerate(aborted)}
-        orig = {renum[t]: orig[t] for t in renum}
-        live = [(renum[t], op, k, u) for t, op, k, u in live if t in renum]
-    if live and strict:
+        t = tid[tix]
+        rts = np.full(len(keys), unreserved)
+        np.minimum.at(rts, kid, t)
+        wts = np.full(len(keys), unreserved)
+        np.minimum.at(wts, kid[upd], t[upd])
+        older_w = wts[kid] < t
+        older_r = rts[kid] < t
+        raw, war, waw = (
+            np.bincount(tix[f], minlength=len(tid)) > 0
+            for f in (older_w, upd & older_r, upd & older_w)
+        )
+        abort = waw | (raw & war) if reorder else waw | raw
+        commit_order.extend(orig[~abort].tolist())
+        # Winners: per key, the last committed update in (Tid, op) order.
+        w = upd & ~abort[tix]
+        wk, wt, wop = kid[w], t[w], op[w]
+        last_first = np.lexsort((wop, wt, wk))[::-1]
+        k, first = np.unique(wk[last_first], return_index=True)
+        i = last_first[first]
+        winner.update(zip(keys[k].tolist(), zip(wt[i].tolist(), wop[i].tolist())))
+        # Collect: aborted txns retry as Tids 1..m in their old order.
+        live = abort[tix]
+        tix = (np.cumsum(abort) - 1)[tix[live]]
+        kid, op, upd = kid[live], op[live], upd[live]
+        orig = orig[abort]
+        tid = np.arange(1, len(orig) + 1, dtype=np.int64)
+    if len(orig) and strict:
         # exhausted the epoch budget with transactions still aborting —
         # never silently drop their writes
         raise RuntimeError(
-            f"aria: {len({t for t, _, _, _ in live})} transactions still live "
+            f"aria: {len(orig)} transactions still live "
             f"after max_epochs={max_epochs} — raise max_epochs"
         )
     return winner, commit_order, epochs
@@ -308,28 +313,35 @@ def run_batch(
     instead of materializing the table every epoch.
 
     ``local_threshold``: batches of at most this many ops run the epoch
-    protocol on the driver in one pass — an OLTP epoch batch is
-    broadcast-sized by definition (the reference caps it at 200 txns,
-    TransctionManager.cuh:15), and per-epoch Spark job overhead would
-    dominate it. The table itself stays distributed; only the op batch
-    is local. When ``ops`` is a ``LocalRelation`` (``gen.transactions``
-    or any :func:`~gpu_database_spark.functions.local.local_frame`)
-    the probe collect is served on the driver and the winner overlay
-    is one too, so this path runs no Spark job before the caller's
-    action on ``result.table``: the install is the only distributed
-    work. Larger batches run fully distributed; equivalence of the
-    paths is test-enforced
+    protocol on the driver in one pass (numpy, :func:`_protocol_local`)
+    — an OLTP epoch batch is broadcast-sized by definition (the
+    reference caps it at 200 txns, TransctionManager.cuh:15), and
+    per-epoch Spark job overhead would dominate it. The table itself
+    stays distributed; only the op batch is local. When ``ops`` was
+    built by :func:`~gpu_database_spark.functions.local.local_frame`
+    (``gen.transactions`` does), its held Arrow rows are read directly;
+    any other ``ops`` is probed with one bounded collect. The winner
+    overlay is a ``LocalRelation`` too, so this path runs no Spark job
+    before the caller's action on ``result.table``: the install is the
+    only distributed work. Larger batches run fully distributed;
+    equivalence of the paths is test-enforced
     (tests/test_aria.py::test_local_fast_path_equals_distributed).
     """
     result = BatchResult(table=table)
-    # ONE bounded collect decides the path AND delivers the rows if
-    # local (no job at all when ops is a LocalRelation): collecting
-    # limit(threshold+1) never exceeds the local budget.
-    probe = ops.limit(local_threshold + 1).collect()
-    if len(probe) <= local_threshold:
-        if not probe:
+    cols = ["txn_id", "op_idx", "key", "is_update"]
+    held = local_rows(ops)
+    if held is not None:
+        rows = np.column_stack([held.column(c).to_numpy() for c in cols])
+    else:
+        # ONE bounded collect decides the path AND delivers the rows if
+        # local: collecting limit(threshold+1) never exceeds the budget.
+        # Plain tuples: numpy probes each Row for array attributes, and a
+        # Row's failed attribute lookup builds an exception (~20 us).
+        probe = ops.select(*cols).limit(local_threshold + 1).collect()
+        rows = [tuple(r) for r in probe]
+    if len(rows) <= local_threshold:
+        if not len(rows):
             return result
-        rows = [(r.txn_id, r.op_idx, r.key, r.is_update) for r in probe]
         winner, result.commit_order, result.epochs = _protocol_local(
             rows, reorder, max_epochs, strict=strict
         )
@@ -339,7 +351,7 @@ def run_batch(
         ]
         if win_rows:
             win = local_frame(ops.sparkSession, win_rows, "key long, value string")
-            result.table = install(table, F.broadcast(win))
+            result.table = install(table, win)
         return result
     # Distributed path: commit decisions, winner overlay and the
     # Collect-phase renumbering all stay DataFrame-side; the only driver

@@ -256,11 +256,19 @@ def aria_foreach_batch_install(
 
     ``batch_to_ops(batch_df) -> ops DataFrame`` maps a micro-batch to
     the (txn_id, op_idx, key, is_update) model; the returned closure
-    keeps the evolving table in ``state['table']``.
+    keeps the evolving table in ``state['table']``. Each micro-batch's
+    table is a checkpoint that frees the one it supersedes, so a frame
+    read from ``state['table']`` stays valid only until the next
+    micro-batch; ``table`` itself is never freed.
     """
+    from gpu_database_spark.functions.materialize import (
+        track_persisted,
+        unpersist_rdds,
+    )
     from gpu_database_spark.operators import aria
 
     state = {"table": table, "epochs": 0, "committed": []}
+    held: set[int] = set()  # RDD ids behind state["table"], once it is ours
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
         ops = batch_to_ops(batch_df)
@@ -269,8 +277,16 @@ def aria_foreach_batch_install(
         # anti-join of the previous table plus a union of the winners;
         # without truncation the plan would deepen by one join per batch
         # (O(N^2) re-evaluation and eventual analysis stack overflow on
-        # a long-running stream).
-        state["table"] = result.table.localCheckpoint(eager=True)
+        # a long-running stream). Not through materialize(): its
+        # release_all would free a live stream's state.
+        state["table"], ids = track_persisted(
+            spark, lambda: result.table.localCheckpoint(eager=True)
+        )
+        # The new checkpoint is materialized, so nothing reads the one
+        # it replaces any more.
+        unpersist_rdds(spark, held)
+        held.clear()
+        held.update(ids)
         state["epochs"] += result.epochs
         state["committed"].extend(result.commit_order)
 

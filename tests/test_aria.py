@@ -14,6 +14,7 @@ import hashlib
 import pytest
 
 from gpu_database_spark import gen
+from gpu_database_spark.functions.local import local_frame, local_rows
 from gpu_database_spark.operators import aria
 
 
@@ -146,6 +147,64 @@ def test_local_path_runs_no_job_before_install(spark, workload, job_group):
         assert jobs() == 0
         got = {r.key: r.value for r in result.table.collect()}
         assert jobs() > 0  # the install is where the distributed work is
+    assert got == serial_oracle(table_rows, ops_rows, reorder=True)[0]
+
+
+def _filtered_gen_batch(spark):
+    """A gen.transactions batch seen through a filter: a derived frame,
+    so it holds no rows and run_batch must probe it."""
+    from pyspark.sql import functions as F
+
+    rows = [r for r in gen.transactions_local(**WORKLOAD_BATCH) if r[2] % 3]
+    ops = gen.transactions(spark, **WORKLOAD_BATCH).filter(F.col("key") % 3 != 0)
+    return ops, rows
+
+
+def _reordered_local_frame(spark):
+    """A local_frame whose DDL lists the op columns in another order."""
+    rows = gen.transactions_local(**WORKLOAD_BATCH)
+    ops = local_frame(
+        spark,
+        [(k, t, u, op) for t, op, k, u in rows],
+        "key long, txn_id long, is_update boolean, op_idx int",
+    )
+    return ops, rows
+
+
+@pytest.mark.parametrize(
+    "build,held",
+    [(_filtered_gen_batch, False), (_reordered_local_frame, True)],
+    ids=["probe", "held-reordered"],
+)
+@pytest.mark.parametrize("reorder", [False, True])
+def test_local_path_sources_match_serial_oracle(spark, workload, build, held, reorder):
+    """The local path reads held rows by column name, and probes any
+    frame that holds none; both must equal the serial replay."""
+    table_rows, table, _, _ = workload
+    ops, rows = build(spark)
+    assert (local_rows(ops) is not None) == held
+    result = aria.run_batch(table, ops, reorder=reorder)
+    want, epoch_commits = serial_oracle(table_rows, rows, reorder)
+    assert {r.key: r.value for r in result.table.collect()} == want
+    assert result.epochs == len(epoch_commits)
+    assert sorted(result.commit_order) == sorted({t for t, _, _, _ in rows})
+
+
+def test_held_rows_never_probe(spark, workload, monkeypatch):
+    """A gen.transactions batch holds its rows: run_batch must not
+    collect (or limit) the ops frame to read them."""
+    table_rows, table, ops_rows, _ = workload
+    ops = gen.transactions(spark, **WORKLOAD_BATCH)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("run_batch probed a frame that holds its rows")
+
+    with monkeypatch.context() as m:
+        # the concrete class: classic DataFrame overrides the base's methods
+        m.setattr(type(ops), "collect", refuse)
+        m.setattr(type(ops), "limit", refuse)
+        result = aria.run_batch(table, ops, reorder=True)
+    got = {r.key: r.value for r in result.table.collect()}
     assert got == serial_oracle(table_rows, ops_rows, reorder=True)[0]
 
 

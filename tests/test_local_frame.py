@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from gpu_database_spark import gen
-from gpu_database_spark.functions.local import local_frame
+from gpu_database_spark.functions.local import local_frame, local_rows
 
 THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
 
@@ -73,3 +73,14 @@ def test_rdd_fallback_above_threshold_keeps_rows(spark):
     finally:
         spark.conf.set(THRESHOLD, old)
     assert spark.conf.get(THRESHOLD) == old
+
+
+def test_local_rows_only_for_the_built_frame(spark):
+    """The frame local_frame built hands back its rows; a frame derived
+    from it, or built any other way, holds none."""
+    ddl, rows = CASES["ops"]
+    df = local_frame(spark, rows, ddl)
+    assert [tuple(r.values()) for r in local_rows(df).to_pylist()] == rows
+    assert local_rows(df.filter("key > 3")) is None
+    assert local_rows(df.select("*")) is None
+    assert local_rows(spark.createDataFrame(rows, ddl)) is None

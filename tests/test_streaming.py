@@ -397,10 +397,16 @@ def test_streaming_soak_1m_events_watermark_and_aria(spark, tmp_path):
         )
         q.awaitTermination(300)
 
+    def persistent_rdds() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before_aria = persistent_rdds()
     for k in range(n_files):  # one micro-batch per arriving file
         write_file(k)
         run_watermark_once()
         run_aria_once()
+        # each micro-batch's checkpoint frees the one it supersedes
+        assert len(persistent_rdds() - before_aria) <= 1, k
 
     got = {r.ws: r.n for r in spark.read.parquet(sink).collect()}
     assert not [ws for ws in got if ws < base], "late windows leaked"
