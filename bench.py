@@ -12,15 +12,14 @@ Also times the Aria engine at the reference's workload configuration
 (BASELINE.md: 200k-row preload, 150-txn batch, U(0,30) ops,
 keys U(1,20000), 40% writes) for baseline comparability.
 
-Isolated-session mode (default, VERDICT r7 ask #3): the suite runs in
-SPARK_GRAFT_BENCH_SESSIONS (default 2) fresh child JVMs, each timing
-every query best-of-SPARK_GRAFT_BENCH_RUNS (default 2); the reported
-number is the per-query MIN across sessions. A fresh JVM per session
-removes every long-session artifact (code-cache pressure, GC history,
-accumulated blocks) from round-over-round comparisons structurally
-instead of by disclaimer; min-of-4-across-2-JVMs is also a tighter
-host-noise floor than min-of-3-in-one. Set
-SPARK_GRAFT_BENCH_SESSIONS=1 for the legacy single-session best-of-3.
+The suite runs in SPARK_GRAFT_BENCH_SESSIONS (default 2) fresh child
+JVMs, each timing every query best-of-SPARK_GRAFT_BENCH_RUNS (default
+2); the reported number is the per-query MIN across sessions. A fresh
+JVM per session removes every long-session artifact (code-cache
+pressure, GC history, accumulated blocks) from run-over-run
+comparisons structurally instead of by disclaimer; min-of-4-across-
+2-JVMs is also a tighter host-noise floor than min-of-3-in-one. One
+session is one child JVM, like any other count.
 """
 
 from __future__ import annotations
@@ -467,73 +466,69 @@ def main() -> None:
             json.dump(res, f)
         return
 
-    if n_sessions <= 1:
-        merged = run_suite(3)  # legacy single-session mode
-        sessions_used = 1
-    else:
-        # Isolated-session mode: each session is a fresh JVM (fresh
-        # code cache, GC state, no accumulated blocks); per-query min
-        # across sessions is the reported time.
-        import subprocess
-        import tempfile
+    # Each session is a fresh child JVM (fresh code cache, GC state,
+    # no accumulated blocks); per-query min across sessions is the
+    # reported time.
+    import subprocess
+    import tempfile
 
-        session_results = []
-        for i in range(n_sessions):
-            with tempfile.NamedTemporaryFile(
-                suffix=f".bench{i}.json", delete=False
-            ) as tf:
-                out_path = tf.name
-            env = dict(os.environ, SPARK_GRAFT_BENCH_CHILD=out_path)
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env,
-                stdout=sys.stderr,  # child chatter never hits parent stdout
-                stderr=sys.stderr,
+    session_results = []
+    for i in range(n_sessions):
+        with tempfile.NamedTemporaryFile(
+            suffix=f".bench{i}.json", delete=False
+        ) as tf:
+            out_path = tf.name
+        env = dict(os.environ, SPARK_GRAFT_BENCH_CHILD=out_path)
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__)],
+            env=env,
+            stdout=sys.stderr,  # child chatter never hits parent stdout
+            stderr=sys.stderr,
+        )
+        try:
+            with open(out_path) as f:
+                session_results.append(json.load(f))
+        except (OSError, ValueError):
+            print(
+                f"bench: session {i} produced no result "
+                f"(exit {proc.returncode})",
+                file=sys.stderr,
             )
+        finally:
             try:
-                with open(out_path) as f:
-                    session_results.append(json.load(f))
-            except (OSError, ValueError):
-                print(
-                    f"bench: session {i} produced no result "
-                    f"(exit {proc.returncode})",
-                    file=sys.stderr,
-                )
-            finally:
-                try:
-                    os.unlink(out_path)
-                except OSError:
-                    pass
-        if not session_results:
-            raise RuntimeError("bench: every isolated session failed")
-        sessions_used = len(session_results)
-        cals = [
-            r["calibration"]
-            for r in session_results
-            if r.get("calibration") is not None
-        ]
-        merged = {
-            "queries": {},
-            "spread": {},
-            "errors": {},
-            "calibration": min(cals) if cals else None,
-        }
-        all_names: list[str] = []
-        for r in session_results:
-            for k in list(r["queries"]) + list(r["errors"]):
-                if k not in all_names:
-                    all_names.append(k)
-        for k in all_names:
-            samples = [r["queries"][k] for r in session_results if k in r["queries"]]
-            if samples:
-                # min across sessions; spread = cross-session disagreement
-                merged["queries"][k] = min(samples)
-                merged["spread"][k] = round(max(samples) - min(samples), 4)
-            else:
-                # failed in EVERY session → a real error, not noise
-                merged["errors"][k] = next(
-                    r["errors"][k] for r in session_results if k in r["errors"]
-                )
+                os.unlink(out_path)
+            except OSError:
+                pass
+    if not session_results:
+        raise RuntimeError("bench: every isolated session failed")
+    sessions_used = len(session_results)
+    cals = [
+        r["calibration"]
+        for r in session_results
+        if r.get("calibration") is not None
+    ]
+    merged = {
+        "queries": {},
+        "spread": {},
+        "errors": {},
+        "calibration": min(cals) if cals else None,
+    }
+    all_names: list[str] = []
+    for r in session_results:
+        for k in list(r["queries"]) + list(r["errors"]):
+            if k not in all_names:
+                all_names.append(k)
+    for k in all_names:
+        samples = [r["queries"][k] for r in session_results if k in r["queries"]]
+        if samples:
+            # min across sessions; spread = cross-session disagreement
+            merged["queries"][k] = min(samples)
+            merged["spread"][k] = round(max(samples) - min(samples), 4)
+        else:
+            # failed in EVERY session → a real error, not noise
+            merged["errors"][k] = next(
+                r["errors"][k] for r in session_results if k in r["errors"]
+            )
 
     timings = merged["queries"]
     spread = merged["spread"]
@@ -555,7 +550,7 @@ def main() -> None:
         "errors": errors,
         "sf": sf_val,
         "sessions": sessions_used,
-        "runs_per_session": n_runs if sessions_used > 1 else 3,
+        "runs_per_session": n_runs,
         "calibration_sec": merged.get("calibration"),
     }
     here = os.path.dirname(os.path.abspath(__file__))
@@ -588,9 +583,9 @@ def main() -> None:
         del out["queries"][fastest]
         line = json.dumps(out, separators=(",", ":"))
 
-    # Spark is already stopped (inside run_suite / the child sessions),
-    # so no shutdown chatter can land after the JSON line in the
-    # combined-stream tail the driver captures.
+    # Spark ran only in the child sessions, so no shutdown chatter can
+    # land after the JSON line in the combined-stream tail the driver
+    # captures.
     sys.stdout.flush()
     print(line)
 

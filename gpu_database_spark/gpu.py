@@ -21,8 +21,6 @@ absent in this container; no GPU tests run here).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
 
 def rapids_confs(
     concurrent_gpu_tasks: int = 2,
@@ -41,15 +39,3 @@ def rapids_confs(
         # columnar shuffle keeps batches on-GPU across stages
         "spark.rapids.sql.batchSizeBytes": "268435456",
     }
-
-
-def try_enable_rapids(spark: SparkSession) -> bool:
-    """Report whether the RAPIDS plugin is active in this session.
-
-    (The plugin can only be enabled at session build time via
-    rapids_confs(); this is a post-hoc probe for bench reporting.)
-    """
-    try:
-        return "com.nvidia.spark.SQLPlugin" in spark.conf.get("spark.plugins", "")
-    except Exception:
-        return False

@@ -91,25 +91,15 @@ def _load_all() -> None:
 
 
 def _driver_history() -> dict[str, int]:
-    """Name -> LATEST round with a GREEN driver row.
+    """Name -> latest round with a green driver row.
 
-    The verification driver samples the FIRST 50 keys of ``queries()``
-    and writes per-round evidence to ``CORRECTNESS_r{N}.json`` at the
-    repo root. Reading those files back lets the registry rotate
-    not-yet-driver-green queries to the front each round, so every
-    declared query eventually earns a driver-green row with no manual
-    bookkeeping. A row only counts if it actually passed (no error and
-    rows matched) — a name whose last sample errored or mismatched
-    rotates back to the front so the fix gets re-verified. The one
-    non-failure "error": ``no_oracle`` is the TERMINAL state for a
-    rows-only query (the driver can never say more), so it counts as
-    checked — unless the query has since gained an oracle, in which
-    case it rotates forward to earn a real oracled row.
-
-    The round NUMBER feeds the staleness term (VERDICT r9 fix #1):
-    once every name is checked at least once, the driver window
-    re-cycles oldest-checked-first so no green row goes stale forever
-    (the aria_* family sat on its r01 rows for eight rounds).
+    The verification driver samples the first 50 keys of ``queries()``
+    and writes its evidence to ``CORRECTNESS_r{N}.json`` at the repo
+    root. A row counts only if it passed (no error, rows and hash
+    matched), so a name whose last sample failed is treated as never
+    checked and gets re-verified. ``no_oracle`` is the terminal state
+    of a rows-only query, so it counts as checked, unless the query has
+    since gained an oracle and must earn a real oracled row.
     """
     repo_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     latest: dict[str, int] = {}
@@ -141,77 +131,25 @@ def _driver_history() -> dict[str, int]:
     return latest
 
 
-def _driver_checked() -> set[str]:
-    """Names already verified GREEN by the driver in any past round."""
-    return set(_driver_history())
-
-
-def _rotation_tier(name: str) -> int:
-    """Priority tier among not-yet-checked queries (lower = sooner)."""
-    if name.startswith("q") and name[1].isdigit() or name == "sql_interface":
-        return 0  # TPC-H shapes
-    if name.startswith("join_"):
-        return 1
-    if name.startswith("window_"):
-        return 2
-    if name.startswith("set_"):
-        return 3
-    if name.startswith("dedup_") or name == "data_mixing_plan":
-        return 4
-    return 5
-
-
-def _prior_declared() -> set[str]:
-    """Names snapshotted at the end of a PREVIOUS round.
-
-    ``tools/declared_snapshot.json`` is written by
-    ``tools/snapshot_declared.py`` at round end. Any snapshot name
-    that still lacks a driver row is BACKLOG: it pins ahead of every
-    query registered since, so new registrations can never front-run
-    it out of the driver's 50-sample window (VERDICT r7 fix #1).
-    """
-    repo_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo_dir, "tools", "declared_snapshot.json")
-    try:
-        with open(path) as fh:
-            names = json.load(fh)
-    except (OSError, ValueError):
-        return set()
-    return set(names) if isinstance(names, list) else set()
-
-
 def queries() -> dict[str, QueryFn]:
-    """All registered queries, rotated for driver sampling.
+    """All registered queries, ordered for the driver's sample window.
 
-    Order: (0) BACKLOG — unchecked queries already declared in a prior
-    round's snapshot (oracled before rows-only), pinned ahead of
-    everything so new registrations can never starve them; (1)
-    unchecked oracled queries, by tier then registration order; (2)
-    unchecked rows-only queries; (3) already-checked queries,
-    OLDEST driver round first — the staleness term (VERDICT r9 #1):
-    once the board is fully drained, leftover window slots re-verify
-    the names whose last green row is oldest, so every oracled query
-    gets a fresh driver row every ~(350-new)/(50-new) rounds. Dict
-    contents are identical either way — only iteration order changes.
+    Names with no green driver row come first (oracled before
+    rows-only), then checked names oldest green round first, so the
+    window re-verifies the stalest rows once everything has one. Ties
+    keep registration order. Only iteration order depends on the
+    history; the dict's contents never do.
     """
     _load_all()
     history = _driver_history()
-    checked = set(history)
-    prior = _prior_declared()
-    names = list(_QUERIES)
 
-    def sort_key(pair: tuple[int, str]) -> tuple[int, int, int]:
-        idx, name = pair
-        if name not in checked and name in prior:
-            return (-1, 0 if name in _ORACLES else 1, idx)
-        if name not in checked and name in _ORACLES:
-            return (0, _rotation_tier(name), idx)
-        if name not in checked:
-            return (1, 0, idx)
-        return (2, history[name], idx)
+    def sort_key(name: str) -> tuple[int, int]:
+        if name not in history:
+            return (0, name not in _ORACLES)
+        return (1, history[name])
 
-    ordered = sorted(enumerate(names), key=sort_key)
-    return {name: _QUERIES[name] for _, name in ordered}
+    # sorted() is stable, so ties keep registration order.
+    return {name: _QUERIES[name] for name in sorted(_QUERIES, key=sort_key)}
 
 
 def oracle_sql() -> dict[str, str]:

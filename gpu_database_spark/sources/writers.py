@@ -1,4 +1,4 @@
-"""Sinks: parquet (plain / partitioned / bucketed), CSV, JSONL.
+"""Sinks: parquet (partitioned / bucketed / sorted / MERGE), CSV, JSONL.
 
 Scale notes (100 TB):
 * ``write_parquet_partitioned`` — partition by a low-cardinality column
@@ -15,10 +15,6 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
 
 
 def write_parquet_partitioned(

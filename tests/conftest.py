@@ -1,11 +1,14 @@
-"""Shared fixtures: one SparkSession per test session, sf0.001 data."""
+"""Shared fixtures: one SparkSession per test session, sf0.001 data, and
+one build of each registered query (``query_record``)."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import sys
 
 import pytest
+from pyspark.sql.types import StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -43,6 +46,68 @@ def duck():
         )
     yield con
     con.close()
+
+
+@dataclasses.dataclass(frozen=True)
+class QueryRecord:
+    """What one build of a registered query showed. It stores answers,
+    not the DataFrame, so a later ``release_all`` cannot invalidate it."""
+
+    schema: StructType | None = None
+    plan: str = ""
+    build_error: Exception | None = None
+    oracle_error: Exception | None = None
+
+    def built(self) -> QueryRecord:
+        if self.build_error is not None:
+            raise self.build_error
+        return self
+
+    def assert_oracle_matches(self) -> None:
+        if self.built().oracle_error is not None:
+            raise self.oracle_error
+
+
+@pytest.fixture(scope="session")
+def query_record(spark, sf_dir, duck):
+    """``query_record(name)`` builds registered query ``name`` once per
+    test session and returns its :class:`QueryRecord`: the schema, the
+    simple plan and, for oracled names, the outcome of the DuckDB
+    oracle compare. A build of a loop query runs its jobs, so the
+    registry-wide tests share one build instead of rebuilding. Records
+    are made on first request, so ``-k`` on one name builds one query;
+    a build or oracle error is stored and re-raised by each reader."""
+    from gpu_database_spark import registry
+    from gpu_database_spark.functions.materialize import release_all
+    from gpu_database_spark.plans import inspect
+    from tests.oracle_utils import assert_query_matches_oracle
+
+    qs, oracles = registry.queries(), registry.oracle_sql()
+    records: dict[str, QueryRecord] = {}
+
+    def build(name: str) -> QueryRecord:
+        try:
+            df = qs[name](spark, sf_dir)
+            schema, plan = df.schema, inspect.simple_plan(df)
+        except Exception as err:
+            err.add_note(f"while building registered query {name!r}")
+            return QueryRecord(build_error=err)
+        try:
+            if name in oracles:
+                assert_query_matches_oracle(df, duck, oracles[name], name=name)
+        except Exception as err:
+            return QueryRecord(schema, plan, oracle_error=err)
+        return QueryRecord(schema, plan)
+
+    def record(name: str) -> QueryRecord:
+        if name not in records:
+            try:
+                records[name] = build(name)
+            finally:
+                release_all(spark)
+        return records[name]
+
+    return record
 
 
 @pytest.fixture

@@ -3,21 +3,21 @@
 The verification driver canonicalizes each result by loading it into
 pandas, sorting columns by name, ``sort_values`` over every column,
 then hashing cell values. Two result shapes break that pipeline even
-when the VALUES are bit-identical across engines (both bit us in
-round 6):
+when the values are bit-identical across engines:
 
 1. a top-level ``array``/``map`` column in the Spark result — pandas
    materializes the cells as ndarrays, which are unhashable, so
-   ``sort_values`` raises (``fn_regexp_extract_all``, round 6);
+   ``sort_values`` raises (``fn_regexp_extract_all`` once did);
 2. a DuckDB oracle aggregate typed HUGEINT (``SUM`` over INTEGER and
    anything it union-promotes) — pandas gives it ``object`` dtype, so
-   the value hash differs from Spark's int64 (``corpus_funnel_yield``,
-   round 6).
+   the value hash differs from Spark's int64 (``corpus_funnel_yield``
+   once did).
 
-These tests enforce the contract over EVERY registered query so the
-class of bug is caught in CI before a driver round burns on it:
-complex values must be stringified (``concat_ws`` / ``to_json``) in
-the final projection, and oracle SUMs must be ``CAST(... AS BIGINT)``.
+These tests enforce the contract over every registered query, so the
+class of bug is caught in CI before a driver run: complex values must
+be stringified (``concat_ws`` / ``to_json``) in the final projection,
+and oracle SUMs must be ``CAST(... AS BIGINT)``. The Spark side reads
+the session's one build of each query (the ``query_record`` fixture).
 """
 
 from __future__ import annotations
@@ -36,13 +36,12 @@ def _oracled_names():
 
 
 @pytest.mark.parametrize("name", _all_names())
-def test_spark_schema_has_no_toplevel_complex_column(spark, sf_dir, name):
+def test_spark_schema_has_no_toplevel_complex_column(query_record, name):
     from pyspark.sql.types import ArrayType, MapType
 
-    df = registry.queries()[name](spark, sf_dir)
     bad = [
         f.name
-        for f in df.schema.fields
+        for f in query_record(name).built().schema.fields
         if isinstance(f.dataType, (ArrayType, MapType))
     ]
     assert not bad, (
@@ -71,7 +70,7 @@ def test_oracle_dtypes_are_pandas_hashable(duck, name):
 
 
 def test_signed_halfup_div_identity_cross_engine(spark):
-    """Regression guard for the ADVICE-r8 signed-quotient class: the
+    """Regression guard for the signed-quotient class: the
     (2u+c) div (2c) half-up identity applied to |u| with the sign
     reattached must equal half-away-from-zero rounding of u/c in BOTH
     engines, including negative sums, zero, and exact half-boundaries.

@@ -1,5 +1,8 @@
 """Drive every registered oracle-checkable query through the same
-Spark-vs-DuckDB compare the verification driver performs (sf0.001)."""
+Spark-vs-DuckDB compare the verification driver performs (sf0.001).
+
+The compare runs once per query per session, inside the
+``query_record`` fixture; these tests read its outcome."""
 
 from __future__ import annotations
 
@@ -13,21 +16,17 @@ def _names():
 
 
 @pytest.mark.parametrize("name", _names())
-def test_query_matches_oracle(spark, duck, sf_dir, name):
-    from tests.oracle_utils import assert_query_matches_oracle
-
-    fn = registry.queries()[name]
-    sql = registry.oracle_sql()[name]
-    df = fn(spark, sf_dir)
-    assert_query_matches_oracle(df, duck, sql, name=name)
+def test_query_matches_oracle(query_record, name):
+    query_record(name).assert_oracle_matches()
 
 
-def test_every_query_has_runnable_entry(spark, sf_dir):
+def test_every_query_has_runnable_entry(query_record):
     qs = registry.queries()
     assert qs, "no queries registered"
-    for name, fn in qs.items():
-        df = fn(spark, sf_dir)
-        assert df.columns, f"{name} returned no columns"
+    for name in qs:
+        assert query_record(name).built().schema.names, (
+            f"{name} returned no columns"
+        )
 
 
 def test_entry_smoke(spark):

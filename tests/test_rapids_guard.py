@@ -1,9 +1,9 @@
-"""RAPIDS-eligibility regression guard (r10 VERDICT ask #5).
+"""RAPIDS-eligibility regression guard.
 
 gpu.py claims the query surface is RAPIDS-eligible: JVM-side
 DataFrame algebra that the RAPIDS Accelerator plugin can place on GPU,
 with Python touching data ONLY at documented Arrow-batched stages.
-This walks the ENTIRE registry at sf0.001 and pins that claim:
+This walks the entire registry at ``sf_dir`` and pins that claim:
 
 * ``BatchEvalPython`` (row-at-a-time Python UDF — the slow path and a
   hard CPU fallback) may appear ONLY in the declared UDTF surface
@@ -14,8 +14,10 @@ This walks the ENTIRE registry at sf0.001 and pins that claim:
   and the per-partition sketch/skyline passes whose scale story is
   written in their docstrings.
 
-A new query that sneaks a Python stage into a hot path fails here by
-name. Limitation (documented): stages upstream of a materialize()
+The plan is the one recorded, before any collect, from the session's
+single build of each query (the ``query_record`` fixture). A new query
+that sneaks a Python stage into a hot path fails here by name.
+Limitation (documented): stages upstream of a materialize()
 checkpoint execute during DataFrame CONSTRUCTION and leave only a
 ``Scan ExistingRDD`` in the final plan, so this guard sees the
 final-plan topology — construction-time Arrow stages are covered by
@@ -45,7 +47,7 @@ ARROW_ALLOWED = {
     "text_compression_ratio",
     # PCA's Gram partials are a mapInPandas tree-aggregate
     "embed_pca_power",
-    # IMI-blocker assignment (round-13): router matmul per Arrow batch
+    # IMI-blocker assignment: router matmul per Arrow batch
     # (closure holds only the O(sqrt n) router panel) + cogrouped
     # per-router cell argmax with the codebook as a broadcast-joined
     # TABLE, never a driver collect (see the query docstring)
@@ -60,22 +62,18 @@ ARROW_NODES = (
 )
 
 
-def test_no_row_udf_or_stray_python_stage_in_any_registered_plan(spark):
+def test_no_row_udf_or_stray_python_stage_in_any_registered_plan(query_record):
     from gpu_database_spark import registry
-    from gpu_database_spark.functions.materialize import release_all
-    from gpu_database_spark.plans import inspect
 
-    sf = "/root/testdata/sf0.001"
     row_udf_offenders: dict[str, str] = {}
     arrow_offenders: dict[str, list[str]] = {}
-    for name, fn in registry.queries().items():
-        plan = inspect.simple_plan(fn(spark, sf))
+    for name in registry.queries():
+        plan = query_record(name).built().plan
         if "BatchEvalPython" in plan and name not in ROW_UDF_ALLOWED:
             row_udf_offenders[name] = "BatchEvalPython"
         stray = [n for n in ARROW_NODES if n in plan]
         if stray and name not in ARROW_ALLOWED:
             arrow_offenders[name] = stray
-        release_all(spark)
     assert not row_udf_offenders, (
         "row-at-a-time Python UDF in a registered plan (hard RAPIDS "
         f"fallback + 10-100x slower than Arrow): {row_udf_offenders}"

@@ -1,59 +1,55 @@
-"""Rotation-pin regression: backlog queries front-run new registrations.
+"""Driver-window rotation: ``registry.queries()`` order.
 
-Round 6 and 7 both lost driver rows for ``semdedup_pipeline`` /
-``sim_maxsim_multivector`` because ``_rotation_tier`` let each round's
-~50 new registrations outrank old unchecked tier-5 names, pushing them
-past the driver's 50-sample cutoff (VERDICT r7 "What's wrong" #1).
-The fix: ``tools/declared_snapshot.json`` (written at round end by
-``tools/snapshot_declared.py``) pins any still-unchecked snapshot name
-ahead of everything registered since. These tests enforce that
-contract directly against the real registry state.
+The verification driver samples the first 50 names of ``queries()``.
+One rule orders them: names with no green driver row first (oracled
+before rows-only), then checked names oldest green round first, ties
+by registration order. These tests pin that rule on a synthetic
+history and check what it yields on the committed driver history.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from gpu_database_spark import registry
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+def test_rotation_rule_on_synthetic_history(monkeypatch):
+    """Unchecked names keep registration order whatever their family
+    or age, and an unchecked oracled name is never queued behind a
+    rows-only one."""
+    registry._load_all()
+    real = registry._driver_history()
+    # Oracled names from different families, registered in the reverse
+    # of any family priority (aggregate, window, join, TPC-H), plus one
+    # rows-only name registered among them.
+    dropped = ["agg_stats", "agg_approx_distinct", "window_rolling_distinct",
+               "join_interval_overlap", "q3_shipping_priority"]
+    for name in dropped:
+        assert name in real, f"{name} has no green driver row to drop"
+    assert "agg_approx_distinct" not in registry._ORACLES
+    # Two new oracled registrations, an aggregate before a TPC-H shape.
+    new = ["agg_synthetic_new", "q0_synthetic_new"]
+    for name in new:
+        monkeypatch.setitem(registry._QUERIES, name, lambda spark, sf: None)
+        monkeypatch.setitem(registry._ORACLES, name, "SELECT 1 AS x")
+    history = {n: r for n, r in real.items() if n not in dropped}
+    monkeypatch.setattr(registry, "_driver_history", lambda: history)
 
-def _snapshot() -> set[str]:
-    with open(os.path.join(REPO, "tools", "declared_snapshot.json")) as fh:
-        return set(json.load(fh))
-
-
-def test_snapshot_exists_and_covers_registry_subset():
-    snap = _snapshot()
-    declared = set(registry.queries())
-    # Every snapshot name must still exist (no silent de-registration).
-    missing = snap - declared
-    assert not missing, f"snapshot names no longer registered: {sorted(missing)}"
-
-
-def test_unchecked_snapshot_names_precede_all_new_registrations():
-    snap = _snapshot()
-    checked = registry._driver_checked()
     order = list(registry.queries())
-    backlog = [n for n in order if n in snap and n not in checked]
-    if not backlog:
-        return  # board fully drained — nothing to pin
-    last_backlog_pos = max(order.index(n) for n in backlog)
-    new_names = [n for n in order if n not in snap]
-    for n in new_names:
-        assert order.index(n) > last_backlog_pos, (
-            f"new registration {n!r} front-runs backlog query "
-            f"{order[last_backlog_pos]!r} — the rotation pin is broken"
-        )
+    registered = list(registry._QUERIES)
+    unchecked_oracled = [n for n in registered
+                         if n not in history and n in registry._ORACLES]
+    assert unchecked_oracled == ["agg_stats", "window_rolling_distinct",
+                                 "join_interval_overlap",
+                                 "q3_shipping_priority", *new]
+    checked = sorted((n for n in registered if n in history),
+                     key=lambda n: (history[n], registered.index(n)))
+    assert order == unchecked_oracled + ["agg_approx_distinct"] + checked
 
 
 def test_checked_names_cycle_oldest_round_first():
-    """Staleness term (VERDICT r9 #1): among already-checked names,
-    the rotation must order by the round of their latest green driver
-    row ascending, so leftover window slots re-verify the stalest
-    names (the aria_* family sat on r01 rows for eight rounds)."""
+    """Among checked names, order follows the round of each name's
+    latest green driver row, ascending, so leftover window slots
+    re-verify the stalest names."""
     history = registry._driver_history()
     order = list(registry.queries())
     checked_rounds = [history[n] for n in order if n in history]
@@ -63,16 +59,12 @@ def test_checked_names_cycle_oldest_round_first():
 
 
 def test_driver_window_spends_every_slot_on_highest_priority_work():
-    """Staleness-window contract (VERDICT r9 #1, restated r11): a
-    stalest-cohort name may overflow the driver's 50-sample window
-    ONLY when displaced by strictly higher-priority work (an unchecked
-    registration or an oracle upgrade re-earning a real row), never by
-    a fresher-checked name — and the displacement must be exactly
-    bounded by that unchecked count. The r11 relaxation exists because
-    the r03 cohort is exactly 50 names, so ANY oracle upgrade (e.g.
-    aria_run_batch gaining its recursive-CTE oracle) must be allowed
-    to take a slot; the displaced name re-fronts next round by
-    construction (it keeps the oldest history round)."""
+    """A stalest-cohort name may sit outside the driver's 50-sample
+    window only when displaced by unchecked work (a new registration or
+    an oracle upgrade re-earning a real row), never by a fresher-checked
+    name, and no more of them than there are unchecked names in the
+    window. The displaced name keeps its old round, so it fronts the
+    next window."""
     history = registry._driver_history()
     order = list(registry.queries())
     oldest = min(history.values())
@@ -90,9 +82,8 @@ def test_driver_window_spends_every_slot_on_highest_priority_work():
             f"{len(unchecked)} unchecked names occupy the window — "
             "a fresher-checked name is displacing stale re-verification"
         )
-    # VERDICT r10 #7 'done' criterion: this round's board must re-check
-    # at least 15 names whose last driver row is r05 or older — or all
-    # of them, once the rotation has drained that pool below 15.
+    # The window re-checks at least 15 names whose last driver row is
+    # r05 or older, or all of them once fewer than 15 are left.
     stale_available = sum(1 for n in order if history.get(n, 99) <= 5)
     stale_in_window = [n for n in window if history.get(n, 99) <= 5]
     assert len(stale_in_window) >= min(15, stale_available), (
@@ -103,8 +94,8 @@ def test_driver_window_spends_every_slot_on_highest_priority_work():
 
 
 def test_backlog_fits_driver_sample_window():
-    """Everything unchecked (backlog + new) must fit in the first 50."""
-    checked = registry._driver_checked()
+    """Everything unchecked must fit in the first 50."""
+    checked = set(registry._driver_history())
     order = list(registry.queries())
     unchecked_positions = [i for i, n in enumerate(order) if n not in checked]
     overflow = [order[i] for i in unchecked_positions if i >= 50]
